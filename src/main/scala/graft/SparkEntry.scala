@@ -8,6 +8,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+/** Resolved-table cache keyed by (session, path). A miss first sweeps
+  * the entries of dead sessions (a long-lived multi-session host must not
+  * retain their plans) and, past 256 entries, drops everything — cloned
+  * sessions share a live context, so `isDead` cannot see them die.
+  * Re-resolving costs one footer read per path. The sweep runs BEFORE the
+  * lookup: `ConcurrentHashMap.computeIfAbsent` forbids touching the map
+  * from its mapping function, which stays a pure `load`.
+  */
+private[graft] final class SessionTableCache[S, V <: AnyRef](
+    isDead: S => Boolean, load: (S, String) => V) {
+  private val map = new java.util.concurrent.ConcurrentHashMap[(S, String), V]()
+
+  def apply(session: S, path: String): V = {
+    val key = (session, path)
+    val hit = map.get(key)
+    if (hit != null) hit
+    else {
+      map.keySet.removeIf(k => isDead(k._1))
+      if (map.size > 256) map.clear()
+      map.computeIfAbsent(key, _ => load(session, path))
+    }
+  }
+
+  def size: Int = map.size
+}
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Every query has a matching `oracleSql` entry in plain DuckDB SQL (the
@@ -182,19 +208,30 @@ object SparkEntry {
       // is set, dump the run's StreamingQueryProgress JSON (batch
       // durations, stateOperators rows/memory) per sink so streaming
       // claims are auditable the way batch explain() plans are. Env
-      // lookup only when unset — no bench-path overhead.
+      // lookup only when unset — no bench-path overhead. Spark keeps only
+      // the last `numRecentProgressUpdates` entries, so the artifact
+      // records the count and that cap: entries == cap means older
+      // batches were dropped.
       sys.env.get("SPARK_GRAFT_STREAM_PROGRESS_DIR").foreach { dir =>
         try {
           val d = java.nio.file.Paths.get(dir)
           java.nio.file.Files.createDirectories(d)
           val name = Option(q.name).getOrElse(q.id.toString)
-          val body = q.recentProgress.map(_.json).mkString("[\n", ",\n", "\n]\n")
+          val body = progressArtifact(q.recentProgress.map(_.json).toSeq,
+            s.conf.get("spark.sql.streaming.numRecentProgressUpdates").toInt)
           java.nio.file.Files.write(d.resolve(s"$name.progress.json"),
             body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         } catch { case _: Throwable => () }
       }
     }
   }
+
+  /** The stream-progress dump: the progress entries Spark kept, their
+    * count and the retention cap they were cut to.
+    */
+  private[graft] def progressArtifact(progress: Seq[String], cap: Int): String =
+    progress.mkString(
+      s"{\"entries\": ${progress.length}, \"cap\": $cap, \"progress\": [\n", ",\n", "\n]}\n")
 
   private def deleteRecursively(f: java.io.File): Unit = {
     val cs = f.listFiles(); if (cs != null) cs.foreach(deleteRecursively)
@@ -246,24 +283,12 @@ object SparkEntry {
   // session so a new session re-resolves. The production analog is a
   // catalog table: resolve once, scan per query.
   // Cached paths are immutable fixture files; a path rewritten mid-session
-  // would serve the stale resolution (documented contract). Entries for
-  // STOPPED sessions are purged on every cache miss (r19, advice fix) so a
-  // long-lived multi-session host doesn't retain dead sessions' plans —
-  // misses happen ~10 times per new session, so the sweep is off the hot
-  // hit path.
-  private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  // would serve the stale resolution (documented contract).
+  private val tableCache = new SessionTableCache[SparkSession, DataFrame](
+    _.sparkContext.isStopped, (sess, p) => sess.read.parquet(p))
   private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     graft.sql.functions.install(spark)
-    val df = tableCache.computeIfAbsent((spark, s"$dir/$name.parquet"),
-      { case (sess, p) =>
-        tableCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-        // cloned sessions share a live context, so isStopped can't see
-        // them die — a hard size bound caps retention either way (a full
-        // re-resolution costs one footer read per fixture, ~ms)
-        if (tableCache.size > 256) tableCache.clear()
-        sess.read.parquet(p)
-      })
+    val df = tableCache(spark, s"$dir/$name.parquet")
     // The driver's testdata drops have shipped events.ts both as int64
     // nanos (read as long under nanosAsLong) and as a us-precision naive
     // timestamp (r10). Normalize to int64 ns-since-epoch so every temporal
@@ -1344,21 +1369,17 @@ object SparkEntry {
     // sjoin_nearest(max_distance=), grid dwithin candidates + rank window.
     // Ties at the exact minimum are all kept (rank, not row_number).
     // UNBOUNDED nearest (geopandas sjoin_nearest without max_distance):
-    // expanding-ring re-probes; the result is schedule-independent (a row
-    // completes only when its candidate set is provably complete), so the
-    // seed follows the method's own guidance — near the typical
-    // nearest-neighbor spacing (~52 units here) — and the doubling rounds
-    // that still execute carry the genuine outlier tail (r19: seed 25 sat
-    // BELOW the typical spacing and burned 2-3 rounds of fixed cost
-    // matching almost nobody)
+    // the two-phase kNN join at k = 1 — one cell-summary aggregate on the
+    // driver, then one distributed pass in which each customer visits only
+    // the cells that can hold its nearest supplier. The cell size shapes
+    // the plan, never the result.
     "g70_sjoin_nearest_expand" -> ((s, d) => {
       val cust = GeoDataFrame(customerPts(s, d))
       val supp = GeoDataFrame(t(s, d, "supplier")
         .withColumn("sx", col("s_acctbal"))
         .withColumn("sy", (col("s_suppkey") % 1000).cast("double"))
         .withColumn("geometry", st_point(col("sx"), col("sy"))))
-      cust.sjoinNearestExpanding(supp, leftKey = "c_custkey",
-          seedDistance = 100.0, cellSize = 200.0)
+      cust.sjoinKnn(supp, leftKey = "c_custkey", k = 1, cellSize = 200.0)
         .select(col("c_custkey"), col("s_suppkey"),
           round(col("dist"), 4).as("dist"))
         .orderBy(col("c_custkey"), col("s_suppkey"))
@@ -1422,19 +1443,18 @@ object SparkEntry {
         .orderBy(col("c_custkey"), col("s_suppkey"))
     }),
 
-    // distributed kNN for large-large inputs: expanding-ring grid probes, a
-    // row completes once it holds >= k candidates in radius (then its
-    // rank<=k set is globally exact). Same result contract as g76's
-    // broadcast kNN — different 100 TB plan (no collect, both sides
-    // stay distributed)
+    // distributed kNN for large-large inputs: the two-phase kNN join (a
+    // per-cell count + envelope summary bounds each row's k-th distance,
+    // then one grid equi-join + rank window answers exactly). Same result
+    // contract as g76's broadcast kNN — different 100 TB plan (only the
+    // cell summary reaches the driver, both sides stay distributed)
     "g77_sjoin_knn_expand" -> ((s, d) => {
       val cust = GeoDataFrame(customerPts(s, d))
       val supp = GeoDataFrame(t(s, d, "supplier")
         .withColumn("sx", col("s_acctbal"))
         .withColumn("sy", (col("s_suppkey") % 1000).cast("double"))
         .withColumn("geometry", st_point(col("sx"), col("sy"))))
-      cust.sjoinNearestExpanding(supp, leftKey = "c_custkey",
-          seedDistance = 200.0, cellSize = 400.0, k = 3)
+      cust.sjoinKnn(supp, leftKey = "c_custkey", k = 3, cellSize = 400.0)
         .select(col("c_custkey"), col("s_suppkey"),
           round(col("dist"), 4).as("dist"))
         .orderBy(col("c_custkey"), col("s_suppkey"))

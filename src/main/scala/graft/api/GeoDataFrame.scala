@@ -1027,35 +1027,6 @@ final case class GeoDataFrame(
     }
   }
 
-  /** Nearest-neighbor spatial join within a radius (geopandas
-    * `sjoin_nearest(max_distance=...)`; the surveyed dask-geopandas version
-    * has no distributed counterpart — this extends the reference surface
-    * with the operator its users fall back to geopandas for).
-    *
-    * `maxDistance` is required: an unbounded nearest search cannot be
-    * planned as one co-partitioned join at scale (it needs expanding-ring
-    * re-probes), and geopandas' own docs recommend `max_distance` for
-    * performance. Rows with no right neighbor within the radius drop out
-    * under `how="inner"` and come back null-padded (null right columns,
-    * null distance) under `how="left"`, matching geopandas. Ties — several
-    * right rows at exactly the minimum distance — are all kept, matching
-    * geopandas; `exclusive=true` drops right geometries equal to the left
-    * geometry (the self-join idiom, shapely `query_nearest(exclusive)`).
-    *
-    * Plan (100 TB shape): dwithin grid join on padded fixed-size cells
-    * (anchor-cell exactly-once emission, zero eager scans) -> RANK window
-    * partitioned by the left key keeps per-left minima. One grid equi-join
-    * + one hash exchange; WindowGroupLimit prefilters rank<=1 candidates
-    * below the exchange, so the shuffle carries near-minimal rows. Never
-    * all-pairs.
-    *
-    * `leftKey` MUST uniquely identify left rows (it is the index analog of
-    * geopandas' per-row semantics): duplicate key values would pool the
-    * candidate sets of distinct rows into one rank window and keep only
-    * the pooled minimum. Not `require`d — verifying uniqueness would cost
-    * a count-distinct pass over the left side; add a surrogate key
-    * (`monotonically_increasing_id`) when no natural unique key exists.
-    */
   /** Geodesic proximity join: pairs of POINT rows within `meters` great-
     * circle meters on lon/lat data (the haversine sphere behind
     * `st_distancesphere`, R = 6371008.8). This is the join every
@@ -1129,12 +1100,7 @@ final case class GeoDataFrame(
         else nL.toDouble * nR.toDouble
       (c, est)
     }
-    val rightRenamed = right.df.columns.foldLeft(right.df) { (acc, c) =>
-      if (df.columns.contains(c)) acc.withColumnRenamed(c, c + rsuffix) else acc
-    }
-    val rGeomName =
-      if (df.columns.contains(right.geometryColumn)) right.geometryColumn + rsuffix
-      else right.geometryColumn
+    val (rightRenamed, rGeomName) = suffixed(right, rsuffix)
     def padOf(g: Column): Column = {
       val latWorst = least(lit(89.99),
         greatest(abs(st_ymin(g)), abs(st_ymax(g))) + lit(padLat))
@@ -1191,30 +1157,44 @@ final case class GeoDataFrame(
     require(maxMeters > 0 && k >= 1, "sjoinNearestSphere: bad params")
     require(Set("inner", "left").contains(how),
       s"unknown sjoinNearestSphere how '$how' (inner | left)")
-    val rGeomName =
-      if (df.columns.contains(right.geometryColumn)) right.geometryColumn + rsuffix
-      else right.geometryColumn
+    val rGeomName = suffixedName(right.geometryColumn, rsuffix)
     val cands = sjoinDwithinSphere(right, maxMeters, rsuffix = rsuffix).df
       .withColumn(distanceCol,
         st_distanceSphere(col(geometryColumn), col(rGeomName)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(leftKey)).orderBy(col(distanceCol))
-    val nearest = cands.withColumn("_rk", rank().over(w))
-      .filter(col("_rk") <= k).drop("_rk")
-    how match {
-      case "inner" => nearest
-      case "left" =>
-        // no distinct(): left_anti ignores probe-side key multiplicity
-        val unmatched = df.join(nearest.select(col(leftKey)),
-          Seq(leftKey), "left_anti")
-        val rightFields = nearest.schema.fields
-          .filter(f => !df.columns.contains(f.name))
-        val padded = rightFields.foldLeft(unmatched)((acc, f) =>
-          acc.withColumn(f.name, lit(null).cast(f.dataType)))
-        nearest.unionByName(padded.select(nearest.columns.map(col).toIndexedSeq: _*))
-    }
+    val nearest = rankNearest(cands, leftKey, rGeomName, distanceCol, k, exclusive = false)
+    if (how == "left") withUnmatchedLeft(nearest, leftKey) else nearest
   }
 
+  /** Nearest-neighbor spatial join within a radius (geopandas
+    * `sjoin_nearest(max_distance=...)`; the surveyed dask-geopandas version
+    * has no distributed counterpart — this extends the reference surface
+    * with the operator its users fall back to geopandas for).
+    *
+    * `maxDistance` is required: the radius bounds the candidate volume of
+    * the one grid join, and geopandas' own docs recommend `max_distance`
+    * for performance ([[sjoinKnn]] is the unbounded join). Rows with no
+    * right neighbor within the radius drop out under `how="inner"` and
+    * come back null-padded (null right columns, null distance) under
+    * `how="left"`, matching geopandas. Ties — several right rows at
+    * exactly the minimum distance — are all kept, matching geopandas;
+    * `exclusive=true` drops right geometries equal to the left geometry
+    * (the self-join idiom, shapely `query_nearest(exclusive)`). `k > 1`
+    * keeps the k nearest with the same `rank() <= k` tie contract.
+    *
+    * Plan (100 TB shape): dwithin grid join on padded fixed-size cells
+    * (anchor-cell exactly-once emission, zero eager scans) -> RANK window
+    * partitioned by the left key keeps per-left minima. One grid equi-join
+    * + one hash exchange; WindowGroupLimit prefilters rank<=k candidates
+    * below the exchange, so the shuffle carries near-minimal rows. Never
+    * all-pairs.
+    *
+    * `leftKey` MUST uniquely identify left rows (it is the index analog of
+    * geopandas' per-row semantics): duplicate key values would pool the
+    * candidate sets of distinct rows into one rank window and keep only
+    * the pooled minimum. Not `require`d — verifying uniqueness would cost
+    * a count-distinct pass over the left side; add a surrogate key
+    * (`monotonically_increasing_id`) when no natural unique key exists.
+    */
   def sjoinNearest(
       right: GeoDataFrame,
       leftKey: String,
@@ -1224,161 +1204,130 @@ final case class GeoDataFrame(
       distanceCol: String = "dist",
       how: String = "inner",
       exclusive: Boolean = false,
-      // k-nearest generalization with the rank()<=k tie contract (k=1 is
-      // exactly geopandas sjoin_nearest); same single grid-join plan
       k: Int = 1): DataFrame = {
-    val (res, candCol) = sjoinNearestImpl(right, leftKey, maxDistance, cellSize,
-      rsuffix, distanceCol, how, exclusive, k)
-    res.drop(candCol)
-  }
-
-  /** [[sjoinNearest]] plus a candidate-count column (collision-free name,
-    * returned alongside the frame) counting each left row's dwithin
-    * candidates inside the radius — the completeness witness the
-    * expanding-ring driver needs (a row with >= k candidates within d has
-    * its true k-th distance <= d, so its rank<=k set is globally exact).
-    */
-  private def sjoinNearestImpl(
-      right: GeoDataFrame,
-      leftKey: String,
-      maxDistance: Double,
-      cellSize: Double,
-      rsuffix: String,
-      distanceCol: String,
-      how: String,
-      exclusive: Boolean,
-      k: Int): (DataFrame, String) = {
     require(maxDistance > 0, "sjoinNearest requires a positive maxDistance")
     require(k >= 1, "sjoinNearest requires k >= 1")
     require(Set("inner", "left").contains(how),
       s"unknown sjoinNearest how '$how' (inner | left)")
-    val rGeomName =
-      if (df.columns.contains(right.geometryColumn)) right.geometryColumn + rsuffix
-      else right.geometryColumn
-    val cands0 = sjoin(right, predicate = "dwithin", strategy = "grid",
+    val rGeomName = suffixedName(right.geometryColumn, rsuffix)
+    val cands = sjoin(right, predicate = "dwithin", strategy = "grid",
       cellSize = Some(cellSize), rsuffix = rsuffix, distance = maxDistance)
       .withColumn(distanceCol, st_distance(col(geometryColumn), col(rGeomName)))
-    // geopandas/shapely `exclusive=True`: a right geometry EQUAL to the
-    // left geometry is not its own nearest neighbor (self-join dedup).
-    // Topological equality, gated on dist==0 so the expensive check runs
-    // only on coincident candidates.
+    val nearest = rankNearest(cands, leftKey, rGeomName, distanceCol, k, exclusive)
+    if (how == "left") withUnmatchedLeft(nearest, leftKey) else nearest
+  }
+
+  /** Unbounded k-nearest-neighbour join with both sides distributed
+    * (geopandas `sjoin_nearest` without `max_distance` at k = 1; the
+    * `rank() <= k` tie contract of [[sjoinKnnBroadcast]] for any k). Two
+    * phases in the manner of REPOSE and Odyssey — prune globally with
+    * per-cell bounds, then answer locally — so the job count does not
+    * depend on how the data is spread:
+    *
+    *  1. Driver: one aggregate buckets the right side into the
+    *     fixed-origin `cellSize` grid, each row in the cell holding its
+    *     envelope centre, and collects per non-empty cell the row count
+    *     and the union of the rows' envelopes. Nothing else reaches the
+    *     driver. Above [[GeoDataFrame.KnnMaxCells]] cells the summary is
+    *     re-aggregated at 4× the cell size, so driver memory stays bounded.
+    *  2. Executors: the summary ships as a broadcast STR-tree and
+    *     [[graft.sql.KnnCellProbe]] sends each left row to every cell that
+    *     can hold one of its k nearest right rows. An equi-join on the home
+    *     cell brings those rows, and a `rank()` window on `leftKey` keeps
+    *     rank <= k — exact, ties included, in one pass.
+    *
+    * Rows with a null or empty geometry drop out on both sides, as in the
+    * broadcast kNN join; with fewer than k right rows every left row gets
+    * all of them. `exclusive = true` skips right geometries equal to the
+    * left one. `leftKey` must uniquely identify left rows (the
+    * [[sjoinNearest]] contract). `cellSize` shapes the plan only: the
+    * result is the same at any cell size.
+    */
+  def sjoinKnn(
+      right: GeoDataFrame,
+      leftKey: String,
+      k: Int,
+      cellSize: Double,
+      rsuffix: String = "_right",
+      distanceCol: String = "dist",
+      exclusive: Boolean = false): DataFrame = {
+    require(k >= 1, "sjoinKnn requires k >= 1")
+    require(cellSize > 0, "sjoinKnn requires a positive cellSize")
+    val (rightRenamed, rGeomName) = suffixed(right, rsuffix)
+    val rg = rightRenamed(rGeomName)
+    val cellCol = freshCol("_knn_cell", df.columns, rightRenamed.columns, Seq(distanceCol))
+    val located = rightRenamed.filter(st_xmin(rg).isNotNull) // drops null and empty
+    // home cell: the grid cell holding the envelope centre, packed as
+    // (ix << 32) | iy. Keys that collide far out merge into one summary
+    // entry, which keeps the result exact (see graft.sql.KnnCells).
+    def homed(cs: Double): DataFrame = {
+      def ix(lo: Column, hi: Column) = floor((lo + hi) / 2 / cs)
+      located.withColumn(cellCol, shiftleft(ix(st_xmin(rg), st_xmax(rg)), 32)
+        .bitwiseOR(ix(st_ymin(rg), st_ymax(rg)).bitwiseAND(lit(0xffffffffL))))
+    }
+    def summarize(cs: Double) = homed(cs).groupBy(col(cellCol))
+      .agg(org.apache.spark.sql.functions.count(lit(1)),
+        min(st_xmin(rg)), min(st_ymin(rg)), max(st_xmax(rg)), max(st_ymax(rg)))
+      .limit(GeoDataFrame.KnnMaxCells + 1).collect()
+    var cs = cellSize
+    var summary = summarize(cs)
+    while (summary.length > GeoDataFrame.KnnMaxCells) { cs *= 4; summary = summarize(cs) }
+    val cells = new graft.sql.KnnCells(summary.map(_.getLong(0)), summary.map(_.getLong(1)),
+      summary.map(r => Envelope(r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))))
+    val probe = org.apache.spark.sql.GraftInterop.column(graft.sql.KnnCellProbe(
+      org.apache.spark.sql.GraftInterop.expression(df(geometryColumn)), k, exclusive,
+      df.sparkSession.sparkContext.broadcast(cells)))
+    val cands = df.withColumn(cellCol, explode(probe))
+      .join(homed(cs), Seq(cellCol)).drop(cellCol)
+      .withColumn(distanceCol, st_distance(col(geometryColumn), col(rGeomName)))
+    rankNearest(cands, leftKey, rGeomName, distanceCol, k, exclusive)
+  }
+
+  /** The nearest-neighbour core both distributed joins finish with: per
+    * `leftKey`, keep the candidates of `rank() <= k` by distance (every tie
+    * at the k-th distance survives). geopandas/shapely `exclusive=True`: a
+    * right geometry EQUAL to the left geometry is not its own nearest
+    * neighbour — topological equality, gated on dist == 0 so the expensive
+    * check runs only on coincident candidates.
+    */
+  private def rankNearest(cands0: DataFrame, leftKey: String, rGeomName: String,
+      distanceCol: String, k: Int, exclusive: Boolean): DataFrame = {
     val cands =
       if (exclusive)
         cands0.filter(!(col(distanceCol) === 0.0 &&
           st_equals(col(geometryColumn), col(rGeomName))))
       else cands0
     val rkCol = freshCol("_rk", cands.columns)
-    val candCol = freshCol("_cand_n", cands.columns, Seq(rkCol))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(leftKey)).orderBy(col(distanceCol))
-    val wAll = org.apache.spark.sql.expressions.Window.partitionBy(col(leftKey))
-    val nearest = cands.withColumn(rkCol, rank().over(w))
-      .withColumn(candCol, org.apache.spark.sql.functions.count(lit(1)).over(wAll))
-      .filter(col(rkCol) <= k).drop(rkCol)
-    val res = how match {
-      case "inner" => nearest
-      case "left" =>
-        // geopandas how="left": left rows with no neighbor in the radius
-        // come back with null right columns and null distance. leftKey is
-        // unique by this method's contract, so the unmatched probe is a
-        // deterministic key anti-join — no row-id stamping needed (unlike
-        // sjoin how=left, where rows carry no unique key). No distinct():
-        // left_anti ignores probe-side key multiplicity.
-        val unmatched = df.join(nearest.select(col(leftKey)),
-          Seq(leftKey), "left_anti")
-        val rightFields = nearest.schema.fields
-          .filter(f => !df.columns.contains(f.name) || f.name == leftKey)
-          .filterNot(_.name == leftKey)
-        val padded = rightFields.foldLeft(unmatched)((acc, f) =>
-          acc.withColumn(f.name, lit(null).cast(f.dataType)))
-        nearest.unionByName(padded.select(nearest.columns.map(col).toIndexedSeq: _*))
-    }
-    (res, candCol)
+    cands.withColumn(rkCol, rank().over(w)).filter(col(rkCol) <= k).drop(rkCol)
   }
 
-  /** Unbounded nearest-neighbor join (geopandas `sjoin_nearest` WITHOUT
-    * `max_distance`) by expanding-ring re-probes: round k runs the bounded
-    * [[sjoinNearest]] at radius `seedDistance·2^k` (cells scale with the
-    * radius) over only the STILL-UNMATCHED left rows, so the expensive
-    * wide-radius rounds see geometrically fewer probes. A row matched at
-    * radius d is globally exact — the dwithin grid join surfaces every
-    * right row within d, so the per-row rank-1 minimum is the true
-    * nearest. Terminates when all left rows matched or after `maxRounds`
-    * doublings (seed·2^maxRounds should exceed the data extent; rows
-    * still unmatched then — right side empty in that region — throw,
-    * matching the method's total-coverage contract).
-    *
-    * 100 TB shape: each round is one grid equi-join + one rank exchange
-    * over the shrinking unmatched set; the remainder is localCheckpoint'd
-    * per round so the anti-join lineage doesn't stack. Pick seedDistance
-    * near the typical nearest-neighbor spacing: most rows match in round
-    * 0 and the tail rounds carry only outliers.
+  /** geopandas how="left" for the nearest joins: left rows with no
+    * neighbour come back with null right columns and null distance.
+    * leftKey is unique by contract, so the unmatched probe is a
+    * deterministic key anti-join — no row-id stamping (unlike sjoin
+    * how=left) and no distinct() (left_anti ignores key multiplicity).
     */
-  def sjoinNearestExpanding(
-      right: GeoDataFrame,
-      leftKey: String,
-      seedDistance: Double,
-      cellSize: Double,
-      rsuffix: String = "_right",
-      distanceCol: String = "dist",
-      exclusive: Boolean = false,
-      maxRounds: Int = 16,
-      // distributed kNN join for large-large inputs (rank()<=k ties kept):
-      // a left row COMPLETES at radius d only once it holds >= k candidates
-      // within d — then its true k-th distance is <= d and every rank<=k
-      // candidate has been surfaced by the dwithin grid join, so the
-      // per-row top-k is globally exact. k=1 degenerates to the geopandas
-      // unbounded sjoin_nearest semantics.
-      k: Int = 1,
-      // observability hook for scale soaks (null = zero overhead): called
-      // after each round with (round, REMAINING unmatched left rows) — the
-      // localCheckpoint-pinned frame, so a probe's count() and plan
-      // inspection are cheap and do not re-run the round
-      roundProbe: (Int, DataFrame) => Unit = null): DataFrame = {
-    require(seedDistance > 0, "sjoinNearestExpanding requires a positive seedDistance")
-    require(k >= 1, "sjoinNearestExpanding requires k >= 1")
-    var remaining = this
-    var out: Option[DataFrame] = None
-    var dist = seedDistance
-    var cell = cellSize
-    var round = 0
-    var done = false
-    while (round <= maxRounds && !done) {
-      // pin the round's join+window output ONCE (r19): the matched rows
-      // feed the final union and the anti-join probe — without the
-      // checkpoint the expensive grid join + rank window re-executed at
-      // result time for EVERY round (the whole loop ran twice). Both
-      // checkpoints are LAZY and the single rest.count() below
-      // materializes the chain — one control job per round instead of
-      // three (eager-ckpt + eager-ckpt + isEmpty), since the anti-join's
-      // probe scan pins `cands` as a side effect.
-      val (cands0, candCol) = remaining.sjoinNearestImpl(right, leftKey, dist, cell,
-        rsuffix, distanceCol, how = "inner", exclusive = exclusive, k = k)
-      val cands = cands0.localCheckpoint(eager = false)
-      val matched = cands.filter(col(candCol) >= k).drop(candCol)
-      // no distinct() on the probe side: left_anti ignores key multiplicity,
-      // and dropping it removes one aggregate exchange per round
-      val rest = remaining.df
-        .join(matched.select(col(leftKey)), Seq(leftKey), "left_anti")
-        .localCheckpoint(eager = false) // pin: cuts the stacked anti-join
-                                        // lineage, materialized by count()
-      val restCnt = rest.count()
-      out = Some(out.map(_.unionByName(matched)).getOrElse(matched))
-      if (roundProbe != null) roundProbe(round, rest)
-      if (restCnt == 0L) done = true
-      else {
-        remaining = remaining.copy(df = rest, spatialPartitions = None,
-          pointSource = None, fileSource = None, boxSource = None,
-          coveringSource = None, spatialPartitionHulls = None)
-        dist *= 2; cell *= 2; round += 1
-      }
-    }
-    if (!done) throw new IllegalStateException(
-      s"sjoinNearestExpanding: rows still incomplete after $maxRounds doublings " +
-        s"(radius ${dist / 2}) — fewer than k=$k right rows in their region? " +
-        "Raise seedDistance/maxRounds")
-    out.get
+  private def withUnmatchedLeft(nearest: DataFrame, leftKey: String): DataFrame = {
+    val unmatched = df.join(nearest.select(col(leftKey)), Seq(leftKey), "left_anti")
+    val padded = nearest.schema.fields.filterNot(f => df.columns.contains(f.name))
+      .foldLeft(unmatched)((acc, f) => acc.withColumn(f.name, lit(null).cast(f.dataType)))
+    nearest.unionByName(padded.select(nearest.columns.map(col).toIndexedSeq: _*))
   }
+
+  /** The right side with the columns it shares with this frame suffixed
+    * (geopandas' `rsuffix`), and the name its geometry column ends up with.
+    */
+  private def suffixed(right: GeoDataFrame, rsuffix: String): (DataFrame, String) = {
+    val renamed = right.df.columns.foldLeft(right.df) { (acc, c) =>
+      if (df.columns.contains(c)) acc.withColumnRenamed(c, c + rsuffix) else acc
+    }
+    (renamed, suffixedName(right.geometryColumn, rsuffix))
+  }
+
+  private def suffixedName(c: String, rsuffix: String): String =
+    if (df.columns.contains(c)) c + rsuffix else c
 
   /** Nearest-neighbor join against a SMALL right side (geopandas
     * `sjoin_nearest`, unbounded by default): the right side is collected,
@@ -1437,12 +1386,7 @@ final case class GeoDataFrame(
       exclusive: Boolean): DataFrame = {
     require(Set("inner", "left").contains(how),
       s"unknown nearest-join how '$how' (inner | left)")
-    val rightRenamed = right.df.columns.foldLeft(right.df) { (acc, c) =>
-      if (df.columns.contains(c)) acc.withColumnRenamed(c, c + rsuffix) else acc
-    }
-    val rGeomName =
-      if (df.columns.contains(right.geometryColumn)) right.geometryColumn + rsuffix
-      else right.geometryColumn
+    val (rightRenamed, rGeomName) = suffixed(right, rsuffix)
     val (bc, localRight, idxCol) = prepareBroadcastSide(rightRenamed, rGeomName)
     val probe = org.apache.spark.sql.GraftInterop.column(
       graft.sql.IndexedNearestProbe(
@@ -1463,7 +1407,7 @@ final case class GeoDataFrame(
 
   /** DataFrame-level overlay (geopandas `overlay(df1, df2, how=...)`;
     * dask-geopandas does not distribute it — geopandas users drop to
-    * single-node for this). Supported hows:
+    * single-node for this). `how` is one of:
     *  - `"intersection"`: one row per intersecting pair, geometry =
     *    pairwise intersection, both attribute sets (right suffixed).
     *  - `"difference"`: left rows with geometry minus the union of all
@@ -1471,9 +1415,16 @@ final case class GeoDataFrame(
     *    through unchanged), attributes = left's. Rows whose geometry is
     *    fully erased are DROPPED (geopandas overlay drops empty results);
     *    pass `dropEmpty = false` to keep them with empty geometries.
-    * `union`/`symmetric_difference` compose from these two (intersection
-    * rows + each side's difference rows) — deliberately not fused, the
-    * composition is three declarative plans Spark unions for free.
+    *  - `"identity"` (intersection + left difference pieces), `"union"`
+    *    (those + right difference pieces) and `"symmetric_difference"`
+    *    (both sides' difference pieces): compositions of the two above —
+    *    deliberately not fused, Spark unions the declarative plans for
+    *    free. They follow geopandas' attribute model: intersection pieces
+    *    carry BOTH sides' columns, left-only pieces carry the right side's
+    *    columns as null and vice versa (`unionByName(allowMissingColumns)`),
+    *    one geometry column named after this frame's. `rightKey` (the
+    *    right frame's row-identity column) is required for the modes that
+    *    build right-side difference pieces (union / symmetric_difference).
     *
     * CONTRACT: `leftKey` must be unique per left row (like
     * [[sjoinNearest]]'s leftKey) — the difference branch unions the
@@ -1487,15 +1438,6 @@ final case class GeoDataFrame(
     * where the bounded cascaded `StUnionAgg` folds intersecting right
     * parts — never all rights, only the candidates. Geometry kernels are
     * narrow expressions either way.
-    */
-  /** df-level set overlay (geopandas `overlay`): `how` in intersection /
-    * difference / identity / union / symmetric_difference. The composed
-    * modes follow geopandas' attribute model — intersection pieces carry
-    * BOTH sides' columns, left-only pieces carry the right side's columns
-    * as null and vice versa (`unionByName(allowMissingColumns)`), one
-    * geometry column named after this frame's. `rightKey` (the right
-    * frame's row-identity column) is required for the modes that build
-    * right-side difference pieces (union / symmetric_difference).
     */
   def overlay(
       right: GeoDataFrame,
@@ -1511,9 +1453,7 @@ final case class GeoDataFrame(
       // row's geometry — two touching polygons produce a line piece that
       // geopandas discards
       keepGeomType: Boolean = true): DataFrame = {
-    val rGeomName =
-      if (df.columns.contains(right.geometryColumn)) right.geometryColumn + rsuffix
-      else right.geometryColumn
+    val rGeomName = suffixedName(right.geometryColumn, rsuffix)
     lazy val cands = sjoin(right, predicate = "intersects", strategy = strategy,
       cellSize = cellSize, rsuffix = rsuffix)
     def interDf: DataFrame = {
@@ -2049,6 +1989,12 @@ final case class GeoDataFrame(
 class CoverageWindowExceeded(msg: String) extends RuntimeException(msg)
 
 object GeoDataFrame {
+  /** Most grid cells a [[GeoDataFrame.sjoinKnn]] cell summary may hold on
+    * the driver; above it the summary is re-aggregated at 4× the cell size.
+    * A fixed bound, not a setting: the result does not depend on it.
+    */
+  private[graft] val KnnMaxCells = 65536
+
   /** points_from_xy (reference `dask_geopandas/expr.py:881-894`). */
   def pointsFromXY(df: DataFrame, x: String, y: String,
       geometryColumn: String = "geometry"): GeoDataFrame =

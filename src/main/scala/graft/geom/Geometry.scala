@@ -203,6 +203,17 @@ final case class Envelope(minX: Double, minY: Double, maxX: Double, maxY: Double
     !isEmpty && !o.isEmpty &&
       o.minX >= minX && o.maxX <= maxX && o.minY >= minY && o.maxY <= maxY
   def expand(d: Double): Envelope = Envelope(minX - d, minY - d, maxX + d, maxY + d)
+  /** Gap between the boxes (0 when they meet): a lower bound on the
+    * distance between any geometries inside them.
+    */
+  def minDistance(o: Envelope): Double = math.hypot(
+    math.max(0.0, math.max(o.minX - maxX, minX - o.maxX)),
+    math.max(0.0, math.max(o.minY - maxY, minY - o.maxY)))
+  /** Farthest corner-to-corner reach between the boxes: an upper bound on
+    * the distance between any geometries inside them.
+    */
+  def maxDistance(o: Envelope): Double = math.hypot(
+    math.max(maxX - o.minX, o.maxX - minX), math.max(maxY - o.minY, o.maxY - minY))
   def toPolygon: Geometry =
     if (isEmpty) Polygon(Array.empty[Array[Double]])
     else if (minX == maxX && minY == maxY) Point(minX, minY)

@@ -54,43 +54,14 @@ final class StrTree private (
     */
   def nearest(probe: Envelope, maxDist: Double, exact: Int => Double): (Array[Int], Double) = {
     if (isEmpty || probe.isEmpty) return (Array.emptyIntArray, Double.NaN)
-    // entries: (lower bound, level, node), ordered by bound
-    val pq = new java.util.PriorityQueue[Array[Double]](
-      11, (a: Array[Double], b: Array[Double]) => java.lang.Double.compare(a(0), b(0)))
     var best = maxDist
     val ties = new scala.collection.mutable.ArrayBuilder.ofInt
     var found = false
-    val top = levels.length - 1
-    var i = 0
-    val topCount = levels(top).length / 4
-    while (i < topCount) {
-      val lb = boxGap(probe, levels(top), i * 4)
-      if (lb <= best) pq.add(Array(lb, top.toDouble, i.toDouble))
-      i += 1
-    }
-    var break = false
-    while (!break && !pq.isEmpty) {
-      val e = pq.poll()
-      if (e(0) > best) break = true
-      else {
-        val level = e(1).toInt; val node = e(2).toInt
-        if (level == 0) {
-          val item = leafItem(node)
-          val d = exact(item)
-          if (d <= best) { // NaN compares false
-            if (d < best || !found) { ties.clear(); best = d; found = true }
-            ties += item
-          }
-        } else {
-          val childCount = levels(level - 1).length / 4
-          var c = node * StrTree.Fanout
-          val end = math.min(c + StrTree.Fanout, childCount)
-          while (c < end) {
-            val lb = boxGap(probe, levels(level - 1), c * 4)
-            if (lb <= best) pq.add(Array(lb, (level - 1).toDouble, c.toDouble))
-            c += 1
-          }
-        }
+    bestFirst(probe, () => best) { item =>
+      val d = exact(item)
+      if (d <= best) { // NaN compares false
+        if (d < best || !found) { ties.clear(); best = d; found = true }
+        ties += item
       }
     }
     if (!found) (Array.emptyIntArray, Double.NaN)
@@ -116,38 +87,11 @@ final class StrTree private (
     val heap = new java.util.PriorityQueue[java.lang.Double](
       k, java.util.Collections.reverseOrder[java.lang.Double]())
     def bound: Double = if (heap.size < k) maxDist else math.min(maxDist, heap.peek)
-    val pq = new java.util.PriorityQueue[Array[Double]](
-      11, (a: Array[Double], b: Array[Double]) => java.lang.Double.compare(a(0), b(0)))
-    val top = levels.length - 1
-    var i = 0
-    val topCount = levels(top).length / 4
-    while (i < topCount) {
-      val lb = boxGap(probe, levels(top), i * 4)
-      if (lb <= bound) pq.add(Array(lb, top.toDouble, i.toDouble))
-      i += 1
-    }
-    var break = false
-    while (!break && !pq.isEmpty) {
-      val e = pq.poll()
-      if (e(0) > bound) break = true
-      else {
-        val level = e(1).toInt; val node = e(2).toInt
-        if (level == 0) {
-          val d = exact(leafItem(node))
-          if (d <= bound) { // NaN compares false
-            heap.add(d)
-            if (heap.size > k) heap.poll()
-          }
-        } else {
-          val childCount = levels(level - 1).length / 4
-          var c = node * StrTree.Fanout
-          val end = math.min(c + StrTree.Fanout, childCount)
-          while (c < end) {
-            val lb = boxGap(probe, levels(level - 1), c * 4)
-            if (lb <= bound) pq.add(Array(lb, (level - 1).toDouble, c.toDouble))
-            c += 1
-          }
-        }
+    bestFirst(probe, () => bound) { item =>
+      val d = exact(item)
+      if (d <= bound) { // NaN compares false
+        heap.add(d)
+        if (heap.size > k) heap.poll()
       }
     }
     if (heap.isEmpty) return Array.empty
@@ -170,12 +114,66 @@ final class StrTree private (
     out.toArray
   }
 
+  /** Smallest `u` at which the items with `upper(i) <= u` weigh at least
+    * `k` together, or +Inf when all items together weigh less. `upper(i)`
+    * must be at least the envelope gap between the probe and item i (NaN
+    * leaves the item out): the best-first walk then stops once the next
+    * gap exceeds the running answer, since no farther item can lower it.
+    * With weight = rows per cell and upper = the farthest box-to-box reach,
+    * `u` bounds the probe's k-th nearest distance.
+    */
+  def weightedBound(probe: Envelope, k: Long, weight: Int => Long,
+      upper: Int => Double): Double = {
+    if (isEmpty || probe.isEmpty) return Double.PositiveInfinity
+    // max-heap of the kept items (upper, weight): the fewest nearest-by-
+    // upper items that still reach k, so the answer is its head
+    val kept = new java.util.PriorityQueue[Array[Double]](
+      11, (a: Array[Double], b: Array[Double]) => java.lang.Double.compare(b(0), a(0)))
+    var total = 0L
+    def bound: Double = if (total < k) Double.PositiveInfinity else kept.peek()(0)
+    bestFirst(probe, () => bound) { item =>
+      val u = upper(item)
+      val w = weight(item)
+      if (u < bound && w > 0) { // NaN compares false
+        kept.add(Array(u, w.toDouble)); total += w
+        while (total - kept.peek()(1).toLong >= k) total -= kept.poll()(1).toLong
+      }
+    }
+    bound
+  }
+
+  // Best-first walk shared by the nearest searches: hands `visit` the leaf
+  // items in ascending envelope-gap order while the gap stays <= bound(),
+  // re-read after every step so a shrinking bound prunes the rest.
+  private def bestFirst(probe: Envelope, bound: () => Double)(visit: Int => Unit): Unit = {
+    val pq = new java.util.PriorityQueue[Array[Double]](
+      11, (a: Array[Double], b: Array[Double]) => java.lang.Double.compare(a(0), b(0)))
+    def push(level: Int, node: Int): Unit = {
+      val lb = boxGap(probe, levels(level), node * 4)
+      if (lb <= bound()) pq.add(Array(lb, level.toDouble, node.toDouble))
+    }
+    val top = levels.length - 1
+    (0 until levels(top).length / 4).foreach(push(top, _))
+    while (!pq.isEmpty && pq.peek()(0) <= bound()) {
+      val e = pq.poll()
+      val level = e(1).toInt; val node = e(2).toInt
+      if (level == 0) visit(leafItem(node))
+      else {
+        val end = math.min((node + 1) * StrTree.Fanout, levels(level - 1).length / 4)
+        (node * StrTree.Fanout until end).foreach(push(level - 1, _))
+      }
+    }
+  }
+
   // gap between the probe envelope and the node box at offset o — a lower
-  // bound for the distance of any geometry pair inside them
+  // bound for the distance of any geometry pair inside them. hypot, as in
+  // the point-distance kernel: between two points the gap then equals the
+  // exact distance bit for bit, so a tied item is never pruned by a bound
+  // rounded one ulp above the running best (sqrt(dx*dx + dy*dy) can be)
   private def boxGap(p: Envelope, e: Array[Double], o: Int): Double = {
     val dx = math.max(0.0, math.max(e(o) - p.maxX, p.minX - e(o + 2)))
     val dy = math.max(0.0, math.max(e(o + 1) - p.maxY, p.minY - e(o + 3)))
-    math.sqrt(dx * dx + dy * dy)
+    math.hypot(dx, dy)
   }
 
   private def descend(level: Int, node: Int, qMinX: Double, qMinY: Double,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression,
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType}
 import org.apache.spark.sql.GraftInterop.AbsType
 import graft.geom.{Envelope, Geometry, Predicates, StrTree, Wkb}
 
@@ -205,5 +205,75 @@ case class IndexedNearestProbe(
   }
 
   override protected def withNewChildInternal(newChild: Expression): IndexedNearestProbe =
+    copy(child = newChild)
+}
+
+/** Phase-1 summary of the right side of a two-phase kNN join: one entry
+  * per non-empty grid cell with its key, its row count and the union of
+  * its rows' envelopes. Exactness needs only that every right row sits in
+  * exactly one entry whose envelope covers the row's. The STR-tree over
+  * the cell envelopes is built lazily once per executor JVM.
+  */
+final class KnnCells(
+    val keys: Array[Long],
+    val counts: Array[Long],
+    val envs: Array[Envelope]) extends Serializable {
+  @transient lazy val tree: StrTree = StrTree.build(envs)
+}
+
+/** Catalyst expression: the cell keys a left row must visit to find its k
+  * nearest right rows — `array<bigint>` feeding an `explode` and an
+  * equi-join on the right rows' home cell.
+  *
+  * U is the smallest farthest-reach (envelope-to-envelope max-distance) at
+  * which the cumulative row count of the cells reaches k, so at least k
+  * right rows lie within U and the k-th nearest distance is at most U.
+  * Every right row of rank <= k is therefore within U, and its cell's gap
+  * to the probe is too: the cells with gap <= U hold all of them. With
+  * fewer than k right rows U is infinite and every cell is visited. Under
+  * `exclusive` the cells meeting the probe envelope (the only ones that
+  * can hold a right geometry equal to the probe) do not count towards U.
+  * Null or empty probes visit no cell.
+  */
+case class KnnCellProbe(
+    child: Expression,
+    k: Int,
+    exclusive: Boolean,
+    index: Broadcast[KnnCells])
+  extends UnaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbsType] = Seq(BinaryType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "st_knn_cells"
+
+  def cells(bytes: Array[Byte]): ArrayData = {
+    val side = index.value
+    val probe = Wkb.envelopeOf(bytes)
+    if (probe.isEmpty) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
+    val u = side.tree.weightedBound(probe, k, side.counts(_), { i =>
+      val e = side.envs(i)
+      if (exclusive && e.intersects(probe)) Double.NaN else probe.maxDistance(e)
+    })
+    val hits =
+      if (u.isInfinite) side.keys
+      else {
+        // slack for rounding in the exact distance kernels: extra cells
+        // only add candidates, which the rank filter drops
+        val reach = u * (1 + 1e-9)
+        side.tree.query(probe.expand(reach))
+          .filter(i => probe.minDistance(side.envs(i)) <= reach).map(side.keys(_))
+      }
+    UnsafeArrayData.fromPrimitiveArray(hits)
+  }
+
+  override def nullSafeEval(input: Any): Any =
+    cells(input.asInstanceOf[Array[Byte]])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("knnCellProbe", this, classOf[KnnCellProbe].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.cells($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): KnnCellProbe =
     copy(child = newChild)
 }

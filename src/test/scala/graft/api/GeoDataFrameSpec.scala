@@ -340,27 +340,25 @@ class GeoDataFrameSpec extends AnyFunSuite {
     assert(got == Seq((1L, 16.0, false), (2L, 0.0, false), (3L, 0.0, true)))
   }
 
-  test("sjoinNearestExpanding: outliers match in later rings; exhaustion throws") {
+  test("sjoinKnn: outliers at 1/5/85 match in one pass; k > |right| returns all") {
     val left = GeoDataFrame(Seq(
-      (1L, 0.0, 0.0),    // round 0 (d=2): right A at d=1
-      (2L, 10.0, 0.0),   // round 2 (d=8): right B at d=5
-      (3L, 100.0, 0.0)   // round 6 (d=128): right B at d=85
+      (1L, 0.0, 0.0),    // right A at d=1, inside its own cell
+      (2L, 10.0, 0.0),   // right B at d=5, two cells away
+      (3L, 100.0, 0.0)   // right B at d=85, far outside every cell
     ).toDF("lid", "x", "y").withColumn("geometry", st_point($"x", $"y")))
     val right = GeoDataFrame(Seq(
       (100L, 1.0, 0.0), (200L, 15.0, 0.0)
     ).toDF("rid", "rx", "ry").withColumn("geometry", st_point($"rx", $"ry")))
-    val out = left.sjoinNearestExpanding(right, leftKey = "lid",
-        seedDistance = 2.0, cellSize = 4.0)
+    def knn(k: Int) = left.sjoinKnn(right, leftKey = "lid", k = k, cellSize = 4.0)
       .select($"lid", $"rid", $"dist").as[(Long, Long, Double)]
       .collect().sorted.toSeq
+    val out = knn(1)
     assert(out == Seq((1L, 100L, 1.0), (2L, 200L, 5.0), (3L, 200L, 85.0)))
     // every left row must appear exactly once (keys are unique here)
     assert(out.map(_._1) == Seq(1L, 2L, 3L))
-    val err = intercept[IllegalStateException] {
-      left.sjoinNearestExpanding(right, leftKey = "lid",
-        seedDistance = 2.0, cellSize = 4.0, maxRounds = 2)
-    }
-    assert(err.getMessage.contains("incomplete"))
+    // k = 3 > |right| = 2: every left row gets both right rows
+    assert(knn(3) == Seq((1L, 100L, 1.0), (1L, 200L, 15.0), (2L, 100L, 9.0),
+      (2L, 200L, 5.0), (3L, 100L, 99.0), (3L, 200L, 85.0)))
   }
 
   test("overlay intersection/difference incl. multipolygon subtrahend and no-hit passthrough") {

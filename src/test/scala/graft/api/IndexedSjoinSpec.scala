@@ -193,21 +193,18 @@ class IndexedSjoinSpec extends AnyFunSuite {
     assert(left.filter(col("rid").isNull).count() > 0)
   }
 
-  test("grid sjoinNearest(k=) and sjoinNearestExpanding(k=) agree with broadcast kNN") {
-    // point-only sides with a unique left key (grid nearest's contract);
-    // null/empty geometries excluded — the expanding join's total-coverage
-    // contract requires every probe row to eventually complete
+  test("grid sjoinNearest(k=) and sjoinKnn(k=) agree with broadcast kNN") {
+    // point-only left side with a unique left key (the leftKey contract)
     val lpts = GeoDataFrame(leftG.df.filter(col("lid") % 5 < 3 && col("lid") < 9000 &&
       col("geometry").isNotNull && !graft.sql.functions.st_isEmpty(col("geometry"))))
     val k = 3
     val truth = lpts.sjoinKnnBroadcast(rightG, k)
       .select(col("lid"), col("rid"), round(col("dist"), 9).as("d"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
-    val viaExpanding = lpts.sjoinNearestExpanding(rightG, leftKey = "lid",
-        seedDistance = 5.0, cellSize = 10.0, k = k)
+    val viaKnn = lpts.sjoinKnn(rightG, leftKey = "lid", k = k, cellSize = 10.0)
       .select(col("lid"), col("rid"), round(col("dist"), 9).as("d"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
-    assert(viaExpanding == truth && truth.nonEmpty)
+    assert(viaKnn == truth && truth.nonEmpty)
     // bounded grid version at a radius covering everything
     val viaGrid = lpts.sjoinNearest(rightG, leftKey = "lid", maxDistance = 500.0,
         cellSize = 250.0, k = k)

@@ -113,6 +113,39 @@ class StrTreeSpec extends AnyFunSuite {
     assert(ties.toSeq == Seq(1) && best == 15.0)
   }
 
+  test("nearest keeps identical tied points when sqrt rounds above hypot") {
+    // a probe/point pair whose sqrt(dx*dx + dy*dy) is one ulp above the
+    // hypot the distance kernel returns: a gap computed that way pruned
+    // the second and third copies after the first set the running best
+    val rnd = new scala.util.Random(17)
+    val (dx, dy) = Iterator.continually((rnd.nextDouble() * 10, rnd.nextDouble() * 10))
+      .find { case (a, b) => math.sqrt(a * a + b * b) > math.hypot(a, b) }.get
+    val tree = StrTree.build(Array.fill(3)(Envelope(dx, dy, dx, dy)))
+    val (ties, best) = tree.nearest(Envelope(0, 0, 0, 0), Double.PositiveInfinity,
+      _ => Measures.distance(Point(0, 0), Point(dx, dy)))
+    assert(ties.toSeq == Seq(0, 1, 2) && best == math.hypot(dx, dy))
+  }
+
+  test("weightedBound matches the brute-force cumulative-weight bound") {
+    val rnd = new scala.util.Random(5)
+    for (n <- Seq(0, 1, 17, 300)) {
+      val envs = Array.fill(n)(randEnv(rnd))
+      val weights = Array.fill(n)(rnd.nextInt(4).toLong) // zero weights too
+      val tree = StrTree.build(envs)
+      for (_ <- 0 until 20; k <- Seq(1L, 3L, 50L)) {
+        val p = randEnv(rnd)
+        // NaN leaves every fifth item out
+        def upper(i: Int) = if (i % 5 == 0) Double.NaN else p.maxDistance(envs(i))
+        val sorted = envs.indices.filterNot(_ % 5 == 0).map(i => (upper(i), weights(i)))
+          .sortBy(_._1)
+        val cum = sorted.scanLeft(0L)(_ + _._2).tail
+        val want = sorted.zip(cum).find(_._2 >= k).map(_._1._1)
+          .getOrElse(Double.PositiveInfinity)
+        assert(tree.weightedBound(p, k, weights(_), upper) == want, s"n=$n k=$k")
+      }
+    }
+  }
+
   test("identical/degenerate point envelopes") {
     val envs = Array.fill(100)(Envelope(5, 5, 5, 5))
     val tree = StrTree.build(envs)

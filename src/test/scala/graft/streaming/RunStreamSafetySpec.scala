@@ -62,4 +62,13 @@ class RunStreamSafetySpec extends AnyFunSuite {
     assert(windowedAppendCounts(Some(false)) == 0L)
     assert(windowedAppendCounts(Some(true)) >= 1L)
   }
+
+  test("progress artifact records the entry count and the retention cap") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    for (entries <- Seq(Seq.empty[String], Seq("{\"batchId\": 0}", "{\"batchId\": 1}"))) {
+      val art = mapper.readTree(SparkEntry.progressArtifact(entries, 100))
+      assert(art.get("entries").asInt == entries.size && art.get("cap").asInt == 100)
+      assert(art.get("progress").size == entries.size)
+    }
+  }
 }
