@@ -1053,28 +1053,14 @@ final case class GeoDataFrame(
       cellSizeDeg: Double = 0.0,
       rsuffix: String = "_right"): GeoDataFrame = {
     require(meters > 0, "sjoinDwithinSphere requires a positive radius")
-    val sphereR = 6371008.8
-    val mPerDegLat = math.Pi * sphereR / 180.0
-    val padLat = meters / mPerDegLat
     // DENSITY-ADAPTIVE cell (r19, guide §2 — derive partitioning from the
-    // input, not a constant tuned at one scale). The cost model has two
-    // opposing terms: left explode fan-out grows as (2·padLat/cell + 1)²
-    // while verify pairs per exploded row grow as nRight·cell²/area. A
-    // FIXED cell is only right at one density — 4·padLat measured best on
-    // the sf0.1 fixture (2·padLat emitted 40% fewer pairs but 2.2× the
-    // exploded rows and a ~2× worse wall), but at sf1's 10× right-side
-    // density the same cell made the verify term explode (52 s: ~135 M
-    // haversine pairs). The default now targets a bounded candidate count
-    // per exploded row: cell = sqrt(C0·area/nRight) with C0 = 45,
-    // clamped to [padLat/2, 4·padLat] — at sf0.1 density this clamps to
-    // the measured-best 4·padLat (identical plan), at 10× density it
-    // shrinks ~3× (3.3× fewer pairs), and the padLat/2 floor caps the
-    // fan-out so pairs stay ~linear in the LEFT side as density grows.
-    // Costs one narrow stats ACTION (right count + extent crossJoined with
-    // the left count — independent subtrees, one job DAG; the
-    // catalog-stats analog, computed exactly because fixtures carry no
-    // stats). Callers can still override via cellSizeDeg (> 0 skips the
-    // stats job AND the pair-estimate repartition below).
+    // input, not a constant tuned at one scale): see
+    // [[GeoDataFrame.sphereGrid]]. Costs one narrow stats ACTION (right
+    // count + extent crossJoined with the left count — independent
+    // subtrees, one job DAG; the catalog-stats analog, computed exactly
+    // because fixtures carry no stats). Callers can still override via
+    // cellSizeDeg (> 0 skips the stats job AND the pair-estimate
+    // repartition below).
     val (cell, pairsEst) = if (cellSizeDeg > 0) (cellSizeDeg, -1.0) else {
       val g = right.df(right.geometryColumn)
       val cnt = org.apache.spark.sql.functions.count(lit(1))
@@ -1083,30 +1069,13 @@ final case class GeoDataFrame(
         .crossJoin(df.agg(cnt.as("_nl")))
         .head()
       val nR = st.getLong(0)
-      val nL = st.getLong(5)
-      val area =
-        if (nR == 0L || st.isNullAt(1)) 0.0
-        else (st.getDouble(2) - st.getDouble(1)) * (st.getDouble(4) - st.getDouble(3))
-      val c0 =
-        if (nR > 0L && area > 0.0) math.sqrt(45.0 * area / nR)
-        else padLat * 4.0 // empty/degenerate extent: density is undefined
-      val c = math.max(math.min(c0, padLat * 4.0), math.max(padLat * 0.5, 1e-9))
-      // expected verify pairs = nL * nR * (2*padLat + cell)^2 / area (the
-      // grid coverage window around each left row); degenerate extent ->
-      // every pair shares a cell
-      val est =
-        if (area > 0.0) nL.toDouble * nR.toDouble *
-          math.pow(2.0 * padLat + c, 2) / area
-        else nL.toDouble * nR.toDouble
-      (c, est)
+      val (area, maxAbsLat) =
+        if (nR == 0L || st.isNullAt(1)) (0.0, 0.0)
+        else ((st.getDouble(2) - st.getDouble(1)) * (st.getDouble(4) - st.getDouble(3)),
+          math.max(math.abs(st.getDouble(3)), math.abs(st.getDouble(4))))
+      GeoDataFrame.sphereGrid(meters, st.getLong(5), nR, area, maxAbsLat)
     }
     val (rightRenamed, rGeomName) = suffixed(right, rsuffix)
-    def padOf(g: Column): Column = {
-      val latWorst = least(lit(89.99),
-        greatest(abs(st_ymin(g)), abs(st_ymax(g))) + lit(padLat))
-      greatest(lit(padLat), lit(2.0 * 180.0 / math.Pi) * asin(least(lit(1.0),
-        lit(math.sin(meters / (2.0 * sphereR))) / cos(radians(latWorst)))))
-    }
     // Parallelism floor (r19, guide §2 stragglers): when the right side is
     // dimension-sized the cell join broadcasts, so the explode -> join ->
     // haversine-verify pipeline inherits the LEFT SCAN's partitioning — a
@@ -1125,13 +1094,14 @@ final case class GeoDataFrame(
       else df
     }
     val l = leftBase.withColumn("_cell", explode(
-      st_gridCellsSizedPad(df(geometryColumn), lit(cell), padOf(df(geometryColumn)))))
+      st_gridCellsSizedPad(df(geometryColumn), lit(cell),
+        GeoDataFrame.spherePad(df(geometryColumn), meters))))
     val r = rightRenamed.withColumn("_cell", explode(
       st_gridCellsSized(rightRenamed(rGeomName), lit(cell))))
     val joined = l.join(r, Seq("_cell"), "inner")
       .filter(st_dwithinSphere(col(geometryColumn), col(rGeomName), lit(meters)))
       .filter(st_gridCellAnchorSizedPad(col(geometryColumn), col(rGeomName),
-        lit(cell), padOf(col(geometryColumn))) === col("_cell"))
+        lit(cell), GeoDataFrame.spherePad(col(geometryColumn), meters)) === col("_cell"))
       .drop("_cell")
     withCrsOf(GeoDataFrame(joined, geometryColumn))
   }
@@ -1994,6 +1964,70 @@ object GeoDataFrame {
     * A fixed bound, not a setting: the result does not depend on it.
     */
   private[graft] val KnnMaxCells = 65536
+
+  private val SphereR = 6371008.8
+  private val SphereMPerDegLat = math.Pi * SphereR / 180.0
+
+  /** Cell size (degrees) and expected verify pairs of a
+    * [[GeoDataFrame.sjoinDwithinSphere]] of `nL` left rows against `nR`
+    * right rows whose envelopes span `area` square degrees up to
+    * |latitude| `maxAbsLat`.
+    *
+    * The cost model has two opposing terms: left explode fan-out grows as
+    * (2·pad/cell + 1)² while verify pairs per exploded row grow as
+    * nRight·cell²/area. A FIXED cell is only right at one density —
+    * 4·padLat measured best on the sf0.1 fixture (2·padLat emitted 40%
+    * fewer pairs but 2.2× the exploded rows and a ~2× worse wall), but at
+    * sf1's 10× right-side density the same cell made the verify term
+    * explode (52 s: ~135 M haversine pairs). The cell therefore targets a
+    * bounded candidate count per exploded row: sqrt(45·area/nR), clamped
+    * to [padLat/2, 4·padLat] — at sf0.1 density this clamps to the
+    * measured-best 4·padLat, at 10× density it shrinks ~3× (3.3× fewer
+    * pairs), and the padLat/2 floor caps the fan-out so pairs stay ~linear
+    * in the left side as density grows.
+    *
+    * Expected verify pairs = nL·nR·(2·pad + cell)²/area, the square being
+    * the cells a left row's [[spherePad]] reaches on both axes, with the
+    * pad taken at the extent's highest latitude (the worst case; away from
+    * the equator the longitude pad exceeds padLat, by 2× at 60°). A
+    * degenerate extent puts every pair in one cell.
+    */
+  private[api] def sphereGrid(meters: Double, nL: Long, nR: Long, area: Double,
+      maxAbsLat: Double): (Double, Double) = {
+    val padLat = meters / SphereMPerDegLat
+    val c0 =
+      if (nR > 0L && area > 0.0) math.sqrt(45.0 * area / nR)
+      else padLat * 4.0 // empty/degenerate extent: density is undefined
+    val c = math.max(math.min(c0, padLat * 4.0), math.max(padLat * 0.5, 1e-9))
+    val est =
+      if (area > 0.0) nL.toDouble * nR.toDouble *
+        math.pow(2.0 * sphereLonPad(meters, maxAbsLat) + c, 2) / area
+      else nL.toDouble * nR.toDouble
+    (c, est)
+  }
+
+  /** Longitude pad (degrees) covering `meters` around a point at
+    * |latitude| `absLat`: the half-width, at the pole-ward edge of the
+    * latitude pad, of a `meters` circle; at least the latitude pad.
+    * [[spherePad]] is the per-row twin.
+    */
+  private def sphereLonPad(meters: Double, absLat: Double): Double = {
+    val padLat = meters / SphereMPerDegLat
+    val latWorst = math.min(89.99, absLat + padLat)
+    math.max(padLat, 2.0 * 180.0 / math.Pi * math.asin(math.min(1.0,
+      math.sin(meters / (2.0 * SphereR)) / math.cos(math.toRadians(latWorst)))))
+  }
+
+  /** Per-row grid pad, on both axes, of a
+    * [[GeoDataFrame.sjoinDwithinSphere]] left geometry: [[sphereLonPad]]
+    * at the geometry's highest |latitude|. */
+  private[api] def spherePad(g: Column, meters: Double): Column = {
+    val padLat = meters / SphereMPerDegLat
+    val latWorst = least(lit(89.99),
+      greatest(abs(st_ymin(g)), abs(st_ymax(g))) + lit(padLat))
+    greatest(lit(padLat), lit(2.0 * 180.0 / math.Pi) * asin(least(lit(1.0),
+      lit(math.sin(meters / (2.0 * SphereR))) / cos(radians(latWorst)))))
+  }
 
   /** points_from_xy (reference `dask_geopandas/expr.py:881-894`). */
   def pointsFromXY(df: DataFrame, x: String, y: String,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Column-level API for the engine's function surface, mirroring
   * `org.apache.spark.sql.functions`. Also installs every function into the
@@ -366,11 +367,34 @@ object functions {
   def gr_frameSample(bin: Column, targetFrames: Column): Column =
     fn("gr_frame_sample", bin, targetFrames)
 
+  /** Generated classes Spark's codegen cache keeps once [[install]] has
+    * sized it (Spark's default is 100). Spark keys the cache by class
+    * loader and source, so in local mode the driver and the executors
+    * each hold one entry per stage: at 100, every warm pass over a
+    * 6-query benchmark list recompiled 17–89 classes; at 512, none
+    * (PROFILE.md, "Codegen cache").
+    */
+  val CodegenCacheEntries = 512
+
   /** Register everything with the session so `spark.sql` can use the names.
     * Idempotent per session — re-installing would spam "function replaced"
     * warnings on every query construction.
+    *
+    * Also sizes Spark's generated-code cache: unless the SparkConf (or the
+    * session) already sets `spark.sql.codegen.cache.maxEntries`, the
+    * session's SQLConf gets [[CodegenCacheEntries]]. That key is a static
+    * conf, so it is written through the session's `SQLConf` rather than
+    * `spark.conf.set`, and Spark reads it only once per JVM, when
+    * `CodeGenerator` first initializes (on the first compiled query). Call
+    * `install` before the session runs its first query, as every engine
+    * entry point does; a JVM that compiled code before it keeps the size
+    * it started with. To choose another size, set the key in the SparkConf
+    * (`--conf` or `-Dspark.sql.codegen.cache.maxEntries=N`).
     */
   def install(spark: SparkSession): Unit = {
+    val conf = spark.sessionState.conf
+    val cacheKey = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+    if (!conf.contains(cacheKey)) conf.setConfString(cacheKey, CodegenCacheEntries.toString)
     // NTv2 runtime grid hook: a session conf pointing at a node-visible
     // directory of .gsb files makes `+nadgrids=<fileName>` records work
     // end-to-end (high-accuracy national-grid transforms instead of the

@@ -1,19 +1,32 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
-/** Per-job wall breakdown of one declared query (optimization triage for
-  * multi-job queries: trainers, streaming gates, IO roundtrips). Prints
-  * every Spark job the query submits with its wall seconds, task count and
-  * the gap since the previous job ended (driver-side time). Not part of
-  * the driver contract. Usage:
-  * `sbt "runMain graft.tools.JobProfile e14_ann_incremental [iters]"`.
+/** Per-job wall breakdown of one pass over declared queries (optimization
+  * triage for multi-job queries: trainers, streaming gates, IO roundtrips).
+  * A pass builds each query in list order and forces it with a noop write,
+  * the shape of `graft.Bench` and the perfbench loop. After one warm-up
+  * pass, each profiled pass prints every Spark job with its query, wall
+  * seconds and the gap since the previous job ended (driver-side time),
+  * then the pass's Janino compiles and compile milliseconds (Spark's
+  * `CodegenMetrics`): non-zero in a warm pass means generated classes were
+  * evicted and recompiled. Queries are full names or their id prefix
+  * (`t02`). Not part of the driver contract. Usage:
+  * `sbt "runMain graft.tools.JobProfile t02,t05,t07,t10,t31,t68 [iters]"`.
   */
 object JobProfile {
+  private val QueryKey = "graft.profile.query"
+
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val names = args(0).split(",").toSeq.filter(_.nonEmpty)
     val iters = args.lift(1).map(_.toInt).getOrElse(2)
+    val fns = names.map { n =>
+      graft.SparkEntry.queries.find { case (k, _) => k == n || k.startsWith(n + "_") }
+        .getOrElse { System.err.println(s"unknown query: $n"); sys.exit(2) }
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -26,53 +39,50 @@ object JobProfile {
     spark.sparkContext.setLogLevel("WARN")
     graft.sql.functions.install(spark)
 
-    final case class J(id: Int, start: Long, var end: Long = -1L,
-      var tasks: Int = 0, var desc: String = "")
+    final case class J(id: Int, start: Long, query: String, desc: String, var end: Long = -1L)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
-    val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val d = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
           .getOrElse("")
-        jobs.put(e.jobId, J(e.jobId, e.time, desc = d))
-        order.add(e.jobId)
+        jobs.put(e.jobId, J(e.jobId, e.time, prop(QueryKey), prop("spark.job.description")))
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
         Option(jobs.get(e.jobId)).foreach(_.end = e.time)
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val sid = e.stageInfo.stageId
-        jobs.forEach((_, j) => ())
-        val _ = sid
-      }
     })
 
-    val fn = graft.SparkEntry.queries(name)
-    // warmup (codegen/JIT) — not profiled
-    try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    catch { case e: Throwable => System.err.println(s"warmup failed: $e") }
+    def pass(): Unit = fns.foreach { case (name, fn) =>
+      spark.sparkContext.setLocalProperty(QueryKey, name)
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable => System.err.println(s"$name failed: $e") }
+      spark.sparkContext.setLocalProperty(QueryKey, null)
+    }
 
+    pass() // warm-up (codegen/JIT), not profiled
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     for (i <- 1 to iters) {
-      jobs.clear(); order.clear()
+      jobs.clear()
+      val (c0, ns0) = (compiles.getCount, CodeGenerator.compileTime)
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      pass()
       val wall = (System.nanoTime() - t0) / 1e9
+      val (nc, compileMs) = (compiles.getCount - c0, (CodeGenerator.compileTime - ns0) / 1e6)
       Thread.sleep(200) // let listener drain
       import scala.jdk.CollectionConverters._
-      val js = order.asScala.toSeq.distinct.flatMap(id => Option(jobs.get(id)))
+      val js = jobs.values.asScala.toSeq.sortBy(_.id)
       var prevEnd = -1L
       var sumJobs = 0.0
-      println(f"== $name iter $i wall $wall%.2f s, ${js.size} jobs ==")
+      println(f"== pass $i wall $wall%.2f s, ${js.size} jobs ==")
       js.foreach { j =>
         val dur = if (j.end > 0) (j.end - j.start) / 1e3 else -1.0
         val gap = if (prevEnd > 0) (j.start - prevEnd) / 1e3 else 0.0
         if (dur > 0) sumJobs += dur
         prevEnd = math.max(prevEnd, j.end)
         val d = if (j.desc.length > 90) j.desc.substring(0, 90) else j.desc
-        println(f"  job ${j.id}%4d ${dur}%7.3f s  gap ${gap}%7.3f s  $d")
+        println(f"  job ${j.id}%4d ${dur}%7.3f s  gap ${gap}%7.3f s  ${j.query} $d")
       }
       println(f"  sum(jobs) $sumJobs%.2f s, driver/gaps ${wall - sumJobs}%.2f s")
+      println(f"  codegen: $nc compiles, $compileMs%.1f ms")
     }
     spark.stop()
   }

@@ -107,6 +107,33 @@ class SjoinSphereSpec extends AnyFunSuite {
     assert(pairs(padLat * 4.0) == adaptive)
   }
 
+  test("pair estimate at 60-70N covers the grid join's verify pairs (longitude pad)") {
+    // the estimate gates the parallelism floor below; the grid pads a left
+    // row on both axes by its longitude pad, ~2.4x the latitude pad at
+    // 65N, so a window of (2*padLat + cell)^2 undercounts the verify pairs
+    // about twofold
+    val rnd = new scala.util.Random(31)
+    def pts(n: Int, id0: Long) = (0 until n).map(i =>
+      (id0 + i, 10.0 + rnd.nextDouble() * 10, 60.0 + rnd.nextDouble() * 10))
+    val (ls, rs) = (pts(600, 0L), pts(400, 1000L))
+    val d = 20000.0
+    def gdf(rows: Seq[(Long, Double, Double)]) = GeoDataFrame(rows.toDF("id", "lon", "lat")
+      .select($"id", st_point($"lon", $"lat").as("geometry")), "geometry")
+    val (left, right) = (gdf(ls), gdf(rs))
+    val (lons, lats) = (rs.map(_._2), rs.map(_._3))
+    val (cell, est) = GeoDataFrame.sphereGrid(d, ls.size, rs.size,
+      (lons.max - lons.min) * (lats.max - lats.min), lats.map(math.abs).max)
+    // the verify pairs of the plan sjoinDwithinSphere builds: padded left
+    // cells equi-joined with right cells, before the haversine filter
+    val l = left.df.withColumn("_cell", explode(st_gridCellsSizedPad($"geometry", lit(cell),
+      GeoDataFrame.spherePad($"geometry", d))))
+    val r = right.df.withColumnRenamed("geometry", "rg").withColumnRenamed("id", "rid")
+      .withColumn("_cell", explode(st_gridCellsSized($"rg", lit(cell))))
+    val actual = l.join(r, Seq("_cell")).count()
+    assert(actual > 1000L, s"$actual verify pairs")
+    assert(est >= actual && est <= 2.0 * actual, s"estimate $est vs $actual verify pairs")
+  }
+
   test("dense input triggers the parallelism-floor repartition without changing results") {
     // 500x500 points inside a 0.5 deg box with a 150 km radius: estimated
     // pairs ~11M >= the 8M gate, and the single-partition left (coalesce(1))
