@@ -3403,10 +3403,6 @@ object SparkEntry {
         .orderBy(col("s_suppkey"))
     }),
 
-    // distance join (reference sjoin predicate="dwithin", sjoin.py:53-58):
-    // padded-cell grid equi-join — the left side's cells expand by the
-    // distance, which preserves the shared-cell invariant for dist<=d
-    // pairs. Same plan SpatialJoinRewrite emits for a SQL st_dwithin join.
     // hot-cell two-level grid sjoin END-TO-END (r13): 40% of each side
     // packed into one cellSize=50 cell, hotCellBudget forces the cold
     // coarse join + hot fine join union (HotCellSjoinSpec asserts the plan
@@ -3439,6 +3435,10 @@ object SparkEntry {
         .orderBy(col("c_custkey"), col("s_suppkey"))
     }),
 
+    // distance join (reference sjoin predicate="dwithin", sjoin.py:53-58):
+    // padded-cell grid equi-join — the left side's cells expand by the
+    // distance, which preserves the shared-cell invariant for dist<=d
+    // pairs. Same plan SpatialJoinRewrite emits for a SQL st_dwithin join.
     "g37_dwithin_join" -> ((s, d) => {
       val pts = GeoDataFrame(customerPts(s, d))
       val sup = GeoDataFrame(t(s, d, "supplier")

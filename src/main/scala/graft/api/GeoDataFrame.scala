@@ -725,18 +725,14 @@ final case class GeoDataFrame(
     *  - `"broadcast"`: broadcast the right side; becomes a
     *    BroadcastNestedLoopJoin with the predicate expression. Right for
     *    dimension-table-sized right sides.
-    *  - `"grid"`: both sides large — explode each row to the uniform grid
-    *    cells its envelope overlaps, shuffle-join on cell id (plain
-    *    equi-join: co-partitioned, AQE/skew handled by Spark), refine with
-    *    the exact predicate, and emit each pair only from its canonical
-    *    anchor cell so no dedup pass is needed. This replaces the
-    *    reference's partition-pair cartesian planning (`sjoin.py:83-90`)
-    *    with a formulation that scales with data, not with
-    *    partition-count². The grid comes from (in order):
-    *    an explicit `cellSize` (origin-anchored fixed grid — ZERO eager
-    *    scans, the 100 TB path), known `spatialPartitions` envelopes on
-    *    both sides (driver metadata only), or one combined bounds job over
-    *    both inputs (never the former two eager per-side scans).
+    *  - `"grid"`: both sides large — the exactly-once grid equi-join that
+    *    [[graft.plans.GridJoin]] builds (the SQL rule
+    *    [[graft.plans.SpatialJoinRewrite]] emits the same plan), in place of
+    *    the reference's partition-pair cartesian planning (`sjoin.py:83-90`).
+    *    The grid comes from (in order): an explicit `cellSize`
+    *    (origin-anchored fixed grid — ZERO eager scans, the 100 TB path),
+    *    known `spatialPartitions` envelopes on both sides (driver metadata
+    *    only), or one combined bounds job over both inputs.
     *  - `"auto"`: grid when both sides have >broadcastThreshold rows hint,
     *    else broadcast.
     *
@@ -758,8 +754,8 @@ final case class GeoDataFrame(
     * ids only cross the shuffle, map-side combined) finds cells whose
     * candidate product nL*nR exceeds the budget; those cells re-grid at
     * `cellSize / hotCellSplit` and the join runs as a UNION of the
-    * cold-cell coarse join and the hot-cell fine join — exactly-once with
-    * no dedup shuffle (anchor argument per level, see
+    * cold-cell coarse join and the hot-cell fine join, one `GridJoin` each
+    * — exactly-once with no dedup shuffle (anchor argument per level, see
     * `GridIndex.fineCellsWithinHot`). Costs one extra counting scan and a
     * second scan of hot-overlapping rows, which is why it is opt-in; at
     * 100 TB the count pass is noise next to a quadratic hot cell.
@@ -807,21 +803,13 @@ final case class GeoDataFrame(
     // dropping or duplicating unmatched rows. localCheckpoint() pins the
     // stamped rows once so both branches read identical ids — same pinning
     // pattern as Dedup.simhashPairs.
-    val leftDf =
-      if (how == "left")
-        df.withColumn(rowId, monotonically_increasing_id()).localCheckpoint()
-      else df
+    def preserved(side: DataFrame, preserve: Boolean): DataFrame =
+      if (preserve) side.withColumn(rowId, monotonically_increasing_id()).localCheckpoint()
+      else side
+    val leftDf = preserved(df, how == "left")
     // disambiguate column names like geopandas' suffixing
-    val rightRenamed0 = right.df.columns.foldLeft(right.df) { (acc, c) =>
-      if (leftDf.columns.contains(c)) acc.withColumnRenamed(c, c + rsuffix) else acc
-    }
-    val rightRenamed =
-      if (how == "right")
-        rightRenamed0.withColumn(rowId, monotonically_increasing_id()).localCheckpoint()
-      else rightRenamed0
-    val rGeomName =
-      if (leftDf.columns.contains(right.geometryColumn)) right.geometryColumn + rsuffix
-      else right.geometryColumn
+    val (rightSuffixed, rGeomName) = suffixed(right, rsuffix)
+    val rightRenamed = preserved(rightSuffixed, how == "right")
     onAttribute.foreach { a =>
       require(df.columns.contains(a) && right.df.columns.contains(a),
         s"sjoin onAttribute '$a' must exist on both sides")
@@ -856,42 +844,40 @@ final case class GeoDataFrame(
           leftDf.join(broadcast(rightRenamed),
             pred(leftDf(geometryColumn), rightRenamed(rGeomName)) && attrEq, "inner")
       case _ =>
+        // cell kernels bind to their side; the refine and emit tests name the
+        // geometries, resolved against the joined sides
+        val (lg, rg) = (leftDf(geometryColumn), rightRenamed(rGeomName))
+        val (lc, rc) = (col(geometryColumn), col(rGeomName))
+        // dwithin pads the LEFT side's cells (and the anchor) by the
+        // distance — that alone preserves the shared-cell invariant for
+        // dist <= d pairs
+        val pad = if (predicate == "dwithin") distance else 0.0
         val (cellsL, cellsR, anchor) = cellSize match {
           case Some(s) if oversized == "sentinel" =>
             // sentinel fallback: outlier-huge rows emit a sentinel bucket
             // instead of an unbounded cell explode; pairs meeting in a
             // sentinel bucket are emitted unconditionally (exactly-once by
             // bucket construction — see GridIndex sentinel docs)
-            val pad = if (predicate == "dwithin") distance else 0.0
-            (st_gridCellsSizedSentinel(leftDf(geometryColumn), lit(s), lit(pad), lit(true)),
-              st_gridCellsSizedSentinel(rightRenamed(rGeomName), lit(s), lit(0.0), lit(false)),
-              st_gridCellAnchorSizedPad(col(geometryColumn), col(rGeomName),
-                lit(s), lit(pad)))
+            (st_gridCellsSizedSentinel(lg, lit(s), lit(pad), lit(true)),
+              st_gridCellsSizedSentinel(rg, lit(s), lit(0.0), lit(false)),
+              st_gridCellAnchorSizedPad(lc, rc, lit(s), lit(pad)))
+          case Some(s) if predicate == "dwithin" =>
+            // fixed origin-anchored grid: nothing to scan before planning
+            (st_gridCellsSizedPad(lg, lit(s), lit(pad)), st_gridCellsSized(rg, lit(s)),
+              st_gridCellAnchorSizedPad(lc, rc, lit(s), lit(pad)))
           case Some(s) =>
-            // fixed origin-anchored grid: nothing to scan before planning.
-            // dwithin pads the LEFT side's cells by the distance — that
-            // alone preserves the shared-cell invariant for dist <= d pairs.
-            val padded =
-              if (predicate == "dwithin")
-                (st_gridCellsSizedPad(leftDf(geometryColumn), lit(s), lit(distance)),
-                  st_gridCellAnchorSizedPad(col(geometryColumn), col(rGeomName),
-                    lit(s), lit(distance)))
-              else
-                (st_gridCellsSized(leftDf(geometryColumn), lit(s)),
-                  st_gridCellAnchorSized(col(geometryColumn), col(rGeomName), lit(s)))
-            (padded._1, st_gridCellsSized(rightRenamed(rGeomName), lit(s)), padded._2)
+            (st_gridCellsSized(lg, lit(s)), st_gridCellsSized(rg, lit(s)),
+              st_gridCellAnchorSized(lc, rc, lit(s)))
           case None =>
             require(predicate != "dwithin",
               "grid sjoin with predicate=dwithin needs an explicit cellSize")
             require(oversized == "fail",
               "oversized=\"sentinel\" needs an explicit cellSize (fixed grid)")
             val b = gridBoundsFromMetadataOr(right)
-            (st_gridCells(leftDf(geometryColumn),
-              lit(b.minX), lit(b.minY), lit(b.maxX), lit(b.maxY), lit(gridLevel)),
-              st_gridCells(rightRenamed(rGeomName),
-                lit(b.minX), lit(b.minY), lit(b.maxX), lit(b.maxY), lit(gridLevel)),
-              st_gridCellAnchor(col(geometryColumn), col(rGeomName),
-                lit(b.minX), lit(b.minY), lit(b.maxX), lit(b.maxY), lit(gridLevel)))
+            val (x0, y0, x1, y1) = (lit(b.minX), lit(b.minY), lit(b.maxX), lit(b.maxY))
+            (st_gridCells(lg, x0, y0, x1, y1, lit(gridLevel)),
+              st_gridCells(rg, x0, y0, x1, y1, lit(gridLevel)),
+              st_gridCellAnchor(lc, rc, x0, y0, x1, y1, lit(gridLevel)))
         }
         // hot-cell detection (opt-in): one counting pass over the exploded
         // cell ids — only (cell, count) partials cross the shuffle — finds
@@ -907,11 +893,11 @@ final case class GeoDataFrame(
             require(hotCellSplit >= 2,
               s"hotCellSplit >= 2 expected (got $hotCellSplit)")
             val maxHot = 4096
-            val lc = leftDf.select(explode(cellsL).as("_cell"))
+            val nl = leftDf.select(explode(cellsL).as("_cell"))
               .groupBy(col("_cell")).agg(org.apache.spark.sql.functions.count(lit(1)).as("_nl"))
-            val rc = rightRenamed.select(explode(cellsR).as("_cell"))
+            val nr = rightRenamed.select(explode(cellsR).as("_cell"))
               .groupBy(col("_cell")).agg(org.apache.spark.sql.functions.count(lit(1)).as("_nr"))
-            val hot = lc.join(rc, Seq("_cell"))
+            val hot = nl.join(nr, Seq("_cell"))
               .filter(col("_nl") * col("_nr") > lit(hotCellBudget))
               // sentinel buckets cannot subdivide; their pairs stay on the
               // coarse branch's unconditional sentinel emit
@@ -925,26 +911,19 @@ final case class GeoDataFrame(
                 "splitting only the hottest; raise cellSize for this data")
             hot.take(maxHot).sorted
           }
-        val l = leftDf.withColumn("_cell", explode(cellsL))
-        val r = rightRenamed.withColumn("_cell", explode(cellsR))
-        val emit =
+        // Catalyst folds the attribute equalities into the join keys beside
+        // the cell id, so they cull candidates before the geometry kernel
+        val cond = pred(lc, rc) && attrEq
+        val emit: Column => Column =
           if (oversized == "sentinel")
-            anchor === col("_cell") ||
-              col("_cell") === lit(graft.sql.GridIndex.OversizedLeftBucket) ||
-              col("_cell") === lit(graft.sql.GridIndex.OversizedRightBucket)
-          else anchor === col("_cell")
-        if (hotCells.isEmpty) {
-          l.join(r, Seq("_cell"), "inner")
-            // attribute equalities FIRST: Catalyst folds them into the join
-            // condition as extra hash keys beside the cell id, and the
-            // cheap comparison culls candidates before the geometry kernel
-            .filter(attrEq)
-            .filter(pred(col(geometryColumn), col(rGeomName)))
-            .filter(emit)
-            .drop("_cell")
-        } else {
+            cell => anchor === cell ||
+              cell === lit(graft.sql.GridIndex.OversizedLeftBucket) ||
+              cell === lit(graft.sql.GridIndex.OversizedRightBucket)
+          else anchor === _
+        if (hotCells.isEmpty) gridJoin(leftDf, rightRenamed, cellsL, cellsR, cond, emit)
+        else {
           // two-level plan: cold cells join at the coarse grid (hot cells
-          // filtered out of both exploded sides — a pair anchored in a hot
+          // kept out of both exploded sides — a pair anchored in a hot
           // cell can never satisfy `anchor === cell` here); hot cells
           // re-grid at cellSize/hotCellSplit and join in a SEPARATE plan
           // (separate key spaces, so coarse/fine id collisions cannot
@@ -952,13 +931,8 @@ final case class GeoDataFrame(
           // per-level anchor argument (GridIndex.fineCellsWithinHot docs).
           val s = cellSize.get
           val hotLit = typedlit(hotCells)
-          val notHot = !array_contains(hotLit, col("_cell"))
-          val cold = l.filter(notHot).join(r.filter(notHot), Seq("_cell"), "inner")
-            .filter(attrEq)
-            .filter(pred(col(geometryColumn), col(rGeomName)))
-            .filter(emit)
-            .drop("_cell")
-          val padL = if (predicate == "dwithin") distance else 0.0
+          val cold = gridJoin(leftDf, rightRenamed, cellsL, cellsR, cond, emit,
+            keep = Some(cell => !array_contains(hotLit, cell)))
           val maxFine = lit(hotFineMaxCells)
           // single-pass kernels either way: sentinel discards the buffer
           // and returns empty on exceed (the row pairs via the meet leg),
@@ -970,17 +944,8 @@ final case class GeoDataFrame(
             else
               st_gridCellsSizedFineHotCap(g, lit(s), lit(hotCellSplit),
                 lit(pad), hotLit, maxFine)
-          val fineL = leftDf.withColumn("_cell", explode(fineExplode(
-            leftDf(geometryColumn), padL)))
-          val fineR = rightRenamed.withColumn("_cell", explode(fineExplode(
-            rightRenamed(rGeomName), 0.0)))
-          val fineEmit = st_gridCellAnchorSizedFine(col(geometryColumn),
-            col(rGeomName), lit(s), lit(hotCellSplit), lit(padL)) === col("_cell")
-          val fine = fineL.join(fineR, Seq("_cell"), "inner")
-            .filter(attrEq)
-            .filter(pred(col(geometryColumn), col(rGeomName)))
-            .filter(fineEmit)
-            .drop("_cell")
+          val fine = gridJoin(leftDf, rightRenamed, fineExplode(lg, pad), fineExplode(rg, 0.0),
+            cond, st_gridCellAnchorSizedFine(lc, rc, lit(s), lit(hotCellSplit), lit(pad)) === _)
           val twoLevel = cold.unionByName(fine)
           if (oversized != "sentinel") twoLevel
           else {
@@ -993,38 +958,44 @@ final case class GeoDataFrame(
             // coarse anchor is hot — cold-anchored pairs already fired in
             // the cold branch. Net: fine-oversized rows degrade to their
             // honest coarse candidate set instead of failing the job.
-            val lov = st_fineHotOversized(col(geometryColumn), lit(s),
-              lit(hotCellSplit), lit(padL), hotLit, maxFine)
-            val rov = st_fineHotOversized(col(rGeomName), lit(s),
-              lit(hotCellSplit), lit(0.0), hotLit, maxFine)
-            val isHot = array_contains(hotLit, col("_cell"))
-            val meet = l.filter(isHot).join(r.filter(isHot), Seq("_cell"), "inner")
-              .filter(lov || rov)
-              .filter(attrEq)
-              .filter(pred(col(geometryColumn), col(rGeomName)))
-              .filter(anchor === col("_cell"))
-              .drop("_cell")
+            val lov = st_fineHotOversized(lc, lit(s), lit(hotCellSplit), lit(pad), hotLit, maxFine)
+            val rov = st_fineHotOversized(rc, lit(s), lit(hotCellSplit), lit(0.0), hotLit, maxFine)
+            val meet = gridJoin(leftDf, rightRenamed, cellsL, cellsR, (lov || rov) && cond,
+              anchor === _, keep = Some(array_contains(hotLit, _)))
             twoLevel.unionByName(meet)
           }
         }
     }
     how match {
       case "inner" => inner
-      case "left" =>
-        val matched = inner.select(col(rowId)).distinct()
-        val unmatched = leftDf.join(matched, Seq(rowId), "left_anti")
-        val withNullRight = rightRenamed.schema.fields.foldLeft(unmatched)((acc, f) =>
-          acc.withColumn(f.name, lit(null).cast(f.dataType)))
-        inner.unionByName(withNullRight.select(inner.columns.map(col).toIndexedSeq: _*))
-          .drop(rowId)
-      case "right" =>
-        val matched = inner.select(col(rowId)).distinct()
-        val unmatched = rightRenamed.join(matched, Seq(rowId), "left_anti")
-        val withNullLeft = leftDf.schema.fields.foldLeft(unmatched)((acc, f) =>
-          acc.withColumn(f.name, lit(null).cast(f.dataType)))
-        inner.unionByName(withNullLeft.select(inner.columns.map(col).toIndexedSeq: _*))
-          .drop(rowId)
+      case "left"  => withUnmatched(inner, leftDf, rowId)
+      case "right" => withUnmatched(inner, rightRenamed, rowId)
     }
+  }
+
+  /** [[graft.plans.GridJoin]] over DataFrames and Columns. */
+  private def gridJoin(l: DataFrame, r: DataFrame, cellsL: Column, cellsR: Column,
+      cond: Column, emit: Column => Column, keep: Option[Column => Column] = None): DataFrame = {
+    import org.apache.spark.sql.GraftInterop.{column, expression, ofRows}
+    def expr(c: Column) = expression(l.sparkSession, c)
+    ofRows(l.sparkSession, graft.plans.GridJoin(l.queryExecution.analyzed,
+      r.queryExecution.analyzed, expr(cellsL), expr(cellsR), expr(cond),
+      cell => expr(emit(column(cell))), keep.map(k => cell => expr(k(column(cell))))))
+  }
+
+  /** sjoin how="left"/"right": rows of the `side` stamped with `rowId`
+    * that found no pair come back once, the other side's columns null.
+    */
+  private def withUnmatched(inner: DataFrame, side: DataFrame, rowId: String): DataFrame = {
+    val matched = inner.select(col(rowId)).distinct()
+    unionNullPadded(inner, side.join(matched, Seq(rowId), "left_anti")).drop(rowId)
+  }
+
+  /** `inner` plus `unmatched`, with nulls in the columns `unmatched` lacks. */
+  private def unionNullPadded(inner: DataFrame, unmatched: DataFrame): DataFrame = {
+    val padded = inner.schema.fields.filterNot(f => unmatched.columns.contains(f.name))
+      .foldLeft(unmatched)((acc, f) => acc.withColumn(f.name, lit(null).cast(f.dataType)))
+    inner.unionByName(padded.select(inner.columns.map(col).toIndexedSeq: _*))
   }
 
   /** Geodesic proximity join: pairs of POINT rows within `meters` great-
@@ -1034,7 +1005,7 @@ final case class GeoDataFrame(
     * dwithin is wrong off the equator (1 deg of longitude shrinks with
     * cos(lat); at 70N a 76 km neighbor sits 2 deg away).
     *
-    * Plan (100 TB shape): the standard exactly-once grid equi-join in
+    * Plan (100 TB shape): one exactly-once [[graft.plans.GridJoin]] in
     * DEGREE space, with the left side's cells padded by a PER-ROW
     * latitude-aware radius: padLat = m / (pi*R/180) exactly (meridian
     * arcs are distance-true on the sphere), and padLon =
@@ -1093,16 +1064,13 @@ final case class GeoDataFrame(
       if (pairsEst >= 8e6 && df.rdd.getNumPartitions < dp) df.repartition(dp)
       else df
     }
-    val l = leftBase.withColumn("_cell", explode(
+    val joined = gridJoin(leftBase, rightRenamed,
       st_gridCellsSizedPad(df(geometryColumn), lit(cell),
-        GeoDataFrame.spherePad(df(geometryColumn), meters))))
-    val r = rightRenamed.withColumn("_cell", explode(
-      st_gridCellsSized(rightRenamed(rGeomName), lit(cell))))
-    val joined = l.join(r, Seq("_cell"), "inner")
-      .filter(st_dwithinSphere(col(geometryColumn), col(rGeomName), lit(meters)))
-      .filter(st_gridCellAnchorSizedPad(col(geometryColumn), col(rGeomName),
-        lit(cell), GeoDataFrame.spherePad(col(geometryColumn), meters)) === col("_cell"))
-      .drop("_cell")
+        GeoDataFrame.spherePad(df(geometryColumn), meters)),
+      st_gridCellsSized(rightRenamed(rGeomName), lit(cell)),
+      st_dwithinSphere(col(geometryColumn), col(rGeomName), lit(meters)),
+      st_gridCellAnchorSizedPad(col(geometryColumn), col(rGeomName),
+        lit(cell), GeoDataFrame.spherePad(col(geometryColumn), meters)) === _)
     withCrsOf(GeoDataFrame(joined, geometryColumn))
   }
 
@@ -1279,12 +1247,8 @@ final case class GeoDataFrame(
     * deterministic key anti-join — no row-id stamping (unlike sjoin
     * how=left) and no distinct() (left_anti ignores key multiplicity).
     */
-  private def withUnmatchedLeft(nearest: DataFrame, leftKey: String): DataFrame = {
-    val unmatched = df.join(nearest.select(col(leftKey)), Seq(leftKey), "left_anti")
-    val padded = nearest.schema.fields.filterNot(f => df.columns.contains(f.name))
-      .foldLeft(unmatched)((acc, f) => acc.withColumn(f.name, lit(null).cast(f.dataType)))
-    nearest.unionByName(padded.select(nearest.columns.map(col).toIndexedSeq: _*))
-  }
+  private def withUnmatchedLeft(nearest: DataFrame, leftKey: String): DataFrame =
+    unionNullPadded(nearest, df.join(nearest.select(col(leftKey)), Seq(leftKey), "left_anti"))
 
   /** The right side with the columns it shares with this frame suffixed
     * (geopandas' `rsuffix`), and the name its geometry column ends up with.

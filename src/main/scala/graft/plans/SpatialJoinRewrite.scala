@@ -6,21 +6,23 @@ import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Catalyst optimizer rule: plan large spatial joins as grid equi-joins.
   *
   * An inner join whose condition is an `st_*` predicate over the two sides'
   * geometry columns has no equi keys, so Spark can only plan a broadcast
   * nested-loop or cartesian join — fine when one side is small, quadratic
-  * disaster when both are large. This rule rewrites the LOGICAL join into
-  * the same formulation `GeoDataFrame.sjoin(strategy = "grid")` builds by
-  * hand: explode both sides to the fixed-size grid cells their envelopes
-  * overlap, equi-join on the cell id (shuffled hash / sort-merge join with
-  * AQE skew handling — the scalable shape), re-check the exact predicate,
-  * and keep each pair only in its canonical anchor cell so no dedup pass is
-  * needed. Works for any `spark.sql` text query or DataFrame join — no
-  * wrapper API required.
+  * disaster when both are large. This rule only matches and gates: it
+  * picks the two geometry arguments (and the `st_dwithin` distance) and
+  * hands the LOGICAL join to [[GridJoin]], the builder
+  * `GeoDataFrame.sjoin(strategy = "grid")` uses too — both sides exploded
+  * to the fixed-size grid cells their envelopes overlap, an equi-join on
+  * the cell id, the original condition as the exact check, and each pair
+  * kept only in its anchor cell. Works for any `spark.sql` text query or
+  * DataFrame join — no wrapper API required. The rewritten join carries
+  * the cell-id equality, so the equi-key decline below keeps the rule from
+  * firing on its own output.
   *
   * Opt-in and gated:
   *  - `spark.graft.sjoin.grid.cellSize` must be set > 0 (the origin-anchored
@@ -54,8 +56,7 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] {
     if (cellSize <= 0) return plan
     plan.transform {
       case j @ Join(left, right, Inner, Some(cond), hint)
-          if cond.deterministic && !alreadyRewritten(cond) &&
-            isLarge(left) && isLarge(right) =>
+          if cond.deterministic && isLarge(left) && isLarge(right) =>
         def sided(a: Expression, b: Expression): Boolean =
           a.references.nonEmpty && b.references.nonEmpty &&
             a.references.subsetOf(left.outputSet) &&
@@ -85,34 +86,17 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] {
           case None => j
           case Some((lGeom, rGeom, pad)) =>
             val cell = Literal(cellSize, DoubleType)
-            val attrL = AttributeReference("_gcell_l", LongType)()
-            val attrR = AttributeReference("_gcell_r", LongType)()
-            val cellsL = pad match {
-              case Some(d) => GraftScalar("st_gridcells_sized_pad", Seq(lGeom, cell, d))
-              case None    => GraftScalar("st_gridcells_sized", Seq(lGeom, cell))
-            }
-            val anchor = pad match {
-              case Some(d) => GraftScalar("st_gridcell_anchor_sized_pad", Seq(lGeom, rGeom, cell, d))
-              case None    => GraftScalar("st_gridcell_anchor_sized", Seq(lGeom, rGeom, cell))
-            }
-            val genL = Generate(
-              Explode(cellsL),
-              unrequiredChildIndex = Nil, outer = false, qualifier = None,
-              generatorOutput = Seq(attrL), child = left)
-            val genR = Generate(
-              Explode(GraftScalar("st_gridcells_sized", Seq(rGeom, cell))),
-              unrequiredChildIndex = Nil, outer = false, qualifier = None,
-              generatorOutput = Seq(attrR), child = right)
-            val newCond = And(And(EqualTo(attrL, attrR), cond), EqualTo(anchor, attrL))
-            Project(j.output, Join(genL, genR, Inner, Some(newCond), hint))
+            // st_dwithin pads the left side's cells and the anchor by d
+            def sized(fname: String, args: Expression*) =
+              GraftScalar(fname + pad.fold("")(_ => "_pad"), args ++ pad)
+            GridJoin(left, right,
+              cellsL = sized("st_gridcells_sized", lGeom, cell),
+              cellsR = GraftScalar("st_gridcells_sized", Seq(rGeom, cell)),
+              cond = cond,
+              emit = c => EqualTo(sized("st_gridcell_anchor_sized", lGeom, rGeom, cell), c),
+              hint = hint)
         }
     }
-  }
-
-  private def alreadyRewritten(cond: Expression): Boolean = cond.exists {
-    case GraftScalar("st_gridcell_anchor_sized", _)     => true
-    case GraftScalar("st_gridcell_anchor_sized_pad", _) => true
-    case _                                              => false
   }
 
   /** Large = would not broadcast: stats above the broadcast threshold, or

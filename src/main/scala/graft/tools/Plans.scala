@@ -27,6 +27,8 @@ object Plans {
     // SPARK_GRAFT_PLAN_OUT=<dir>,<suffix>: write one
     // <dir>/<query>_<suffix>.txt per query in FORMATTED mode (the r18
     // optimization-round plan artifacts) instead of stdout SimpleMode.
+    // Expression and plan ids are replaced by a placeholder there, so two
+    // dumps of the same plan diff clean whatever ran before them.
     val out = sys.env.get("SPARK_GRAFT_PLAN_OUT").map { s =>
       val Array(dir, suffix) = s.split(",", 2); (dir, suffix)
     }
@@ -36,7 +38,8 @@ object Plans {
         out match {
           case Some((dir, suffix)) =>
             val txt = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
+                org.apache.spark.sql.execution.FormattedMode)
+              .replaceAll("#\\d+", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
             java.nio.file.Files.write(
               java.nio.file.Paths.get(s"$dir/${n}_$suffix.txt"),
               txt.getBytes("UTF-8"))

@@ -13,6 +13,13 @@ object GraftInterop {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `c` with nested Columns converted too, for plans built by hand. */
+  def expression(spark: SparkSession, c: Column): Expression =
+    spark.asInstanceOf[classic.SparkSession].expression(c)
+  /** An analyzed DataFrame over a hand-built plan (`Dataset.ofRows`). */
+  def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
   /** `localCheckpoint` with a bounded size estimate.
     *
     * Spark 4's `Dataset.localCheckpoint` eagerly carries the ORIGINAL

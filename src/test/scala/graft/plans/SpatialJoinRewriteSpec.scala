@@ -90,20 +90,95 @@ class SpatialJoinRewriteSpec extends AnyFunSuite {
     }
   }
 
-  test("sjoin dwithin grid matches broadcast dwithin") {
-    val (pts, _) = fixtures()
+  /** Boxes, points and segments on a 50-unit lattice: equal, edge-sharing,
+    * overlapping, nested, crossing and boundary-touching pairs, many of
+    * them on the 100-unit cell borders, so every predicate has matches.
+    */
+  private def mixedShapes(idCol: String, geomCol: String, shift: Double) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(23 + shift.toInt)
+    def box(x: Double, y: Double, w: Double) =
+      s"POLYGON(($x $y, ${x + w} $y, ${x + w} ${y + w}, $x ${y + w}, $x $y))"
+    val boxes = for (i <- 0 until 6; j <- 0 until 6) yield box(50.0 * i + shift, 50.0 * j, 50.0)
+    val small = (0 until 30).map(_ => box(rnd.nextInt(30) * 10.0, rnd.nextInt(30) * 10.0, 10.0))
+    val points = (0 until 120).map(_ => s"POINT(${rnd.nextInt(60) * 5.0} ${rnd.nextInt(60) * 5.0})")
+    val lines = (0 until 40).map { _ =>
+      val (x, y) = (rnd.nextInt(30) * 10.0, rnd.nextInt(30) * 10.0)
+      s"LINESTRING($x $y, ${x + 60 + shift} ${y + 35})"
+    }
+    (boxes ++ small ++ points ++ lines).zipWithIndex
+      .map { case (w, i) => (i.toLong, w) }.toDF(idCol, "wkt")
+      .select(col(idCol), st_geomFromWKT(col("wkt")).as(geomCol))
+  }
+
+  test("sjoin predicates: SQL rewrite, grid and broadcast agree") {
     import graft.api.GeoDataFrame
-    val left = GeoDataFrame(pts.select(col("id"), col("geometry")))
-    val right = GeoDataFrame(pts.select(col("id").as("rid"), col("geometry")))
-    def run(strategy: String) =
-      left.sjoin(right, predicate = "dwithin", strategy = strategy,
-          cellSize = Some(100.0), distance = 25.0)
-        .select(col("id"), col("rid"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val b = run("broadcast")
-    val g = run("grid")
-    assert(b.nonEmpty)
-    assert(b == g)
+    val (pts, _) = fixtures()
+    val l = mixedShapes("id", "geometry", 0.0)
+    val r = mixedShapes("rid", "geometry", 25.0)
+    val cases = Seq("intersects" -> "st_intersects", "contains" -> "st_contains",
+      "contains_properly" -> "st_containsproperly", "within" -> "st_within",
+      "covers" -> "st_covers", "covered_by" -> "st_coveredby",
+      "touches" -> "st_touches", "crosses" -> "st_crosses",
+      "overlaps" -> "st_overlaps", "dwithin" -> "st_dwithin")
+    // the dwithin point cloud of the original test stays as a second input
+    val inputs = Seq((l, r, cases),
+      (pts.select(col("id"), col("geometry")),
+        pts.select(col("id").as("rid"), col("geometry")), Seq("dwithin" -> "st_dwithin")))
+    for ((ldf, rdf, preds) <- inputs; (predicate, fn) <- preds) {
+      def sjoin(strategy: String) =
+        GeoDataFrame(ldf).sjoin(GeoDataFrame(rdf), predicate = predicate,
+            strategy = strategy, cellSize = Some(100.0), distance = 25.0)
+          .select(col("id"), col("rid"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      val b = sjoin("broadcast")
+      val g = sjoin("grid")
+      ldf.createOrReplaceTempView("sl")
+      rdf.withColumnRenamed("geometry", "rgeom").createOrReplaceTempView("sr")
+      val on = if (predicate == "dwithin") s"$fn(geometry, rgeom, 25.0)" else s"$fn(geometry, rgeom)"
+      spark.conf.set(SpatialJoinRewrite.CELL_SIZE_KEY, "100.0")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val sql = try {
+        val q = spark.sql(s"SELECT id, rid FROM sl JOIN sr ON $on")
+        assert(q.queryExecution.optimizedPlan.toString.contains("st_gridcells_sized"), predicate)
+        q.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      } finally {
+        spark.conf.unset(SpatialJoinRewrite.CELL_SIZE_KEY)
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      }
+      assert(b.nonEmpty, predicate)
+      assert(g == b, s"$predicate: grid ${g.length} rows vs broadcast ${b.length}")
+      assert(sql == b, s"$predicate: SQL rewrite ${sql.length} rows vs broadcast ${b.length}")
+    }
+  }
+
+  test("the rule leaves its own output unchanged") {
+    val (pts, boxes) = fixtures()
+    pts.createOrReplaceTempView("pts")
+    boxes.createOrReplaceTempView("boxes")
+    spark.conf.set(SpatialJoinRewrite.CELL_SIZE_KEY, "100.0")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // the rule reads its conf from the active session
+    val active = org.apache.spark.sql.SparkSession.getActiveSession
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    try {
+      for (sql <- Seq("SELECT id, rid FROM pts JOIN boxes ON st_within(geometry, bgeom)",
+          "SELECT a.id, b.id FROM pts a JOIN pts b ON st_dwithin(a.geometry, b.geometry, 25.0)")) {
+        val qe = spark.sql(sql).queryExecution
+        val once = SpatialJoinRewrite(qe.analyzed)
+        assert(once.toString.contains("st_gridcells_sized"), once)
+        val twice = SpatialJoinRewrite(once)
+        assert(twice == once, s"second application changed the plan:\n$twice")
+        assert(SpatialJoinRewrite(qe.optimizedPlan) == qe.optimizedPlan)
+      }
+    } finally {
+      active match {
+        case Some(a) => org.apache.spark.sql.SparkSession.setActiveSession(a)
+        case None    => org.apache.spark.sql.SparkSession.clearActiveSession()
+      }
+      spark.conf.unset(SpatialJoinRewrite.CELL_SIZE_KEY)
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("no rewrite when a side is broadcast-sized") {
