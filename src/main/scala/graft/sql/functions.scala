@@ -405,20 +405,14 @@ object functions {
       Ntv2.setGridDir(Some(ntv2Dir))
       Ntv2.registerDir(ntv2Dir)
     }
-    // optimizer rules (idempotent by reference); sessions built with
-    // spark.sql.extensions=graft.plans.GraftExtensions get them natively
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.SpatialFilterPushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.SpatialFilterPushdown
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.V2BboxPushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.V2BboxPushdown
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.SpatialJoinRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.SpatialJoinRewrite
-    if (!spark.experimental.extraStrategies.contains(graft.plans.IndexedSpatialJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.IndexedSpatialJoinStrategy
+    // optimizer rules and planner strategies (idempotent by reference);
+    // sessions built with spark.sql.extensions=graft.plans.GraftExtensions
+    // get them natively
+    val experimental = spark.experimental
+    experimental.extraOptimizations ++=
+      graft.plans.GraftExtensions.rules.filterNot(experimental.extraOptimizations.contains)
+    experimental.extraStrategies ++=
+      graft.plans.GraftExtensions.strategies.filterNot(experimental.extraStrategies.contains)
     val registry = spark.sessionState.functionRegistry
     if (registry.functionExists(
         org.apache.spark.sql.catalyst.FunctionIdentifier("st_union_agg"))) return

@@ -1,6 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicReference
+
+import org.apache.spark.sql.{GraftInterop, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SimpleMode}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dump formatted physical plans for headline queries — the .explain audit
   * for pushdown / broadcast / codegen / shuffle count. Run:
@@ -9,9 +13,11 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    // the core count shapes adaptive plans (coalescing, SmallSort's gate)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // SPARK_GRAFT_AQE=false shows static ReuseExchange decisions that AQE
       // would otherwise only apply at runtime (as stage reuse)
@@ -27,18 +33,28 @@ object Plans {
     // SPARK_GRAFT_PLAN_OUT=<dir>,<suffix>: write one
     // <dir>/<query>_<suffix>.txt per query in FORMATTED mode (the r18
     // optimization-round plan artifacts) instead of stdout SimpleMode.
-    // Expression and plan ids are replaced by a placeholder there, so two
-    // dumps of the same plan diff clean whatever ran before them.
+    // Each query runs first (a noop write, as the benchmark forces it) and
+    // the dump is that write's final adaptive plan (isFinalPlan=true), the
+    // one AQE re-planned from runtime sizes. Expression and plan ids are
+    // replaced by a placeholder there, so two dumps of the same plan diff
+    // clean whatever ran before them.
     val out = sys.env.get("SPARK_GRAFT_PLAN_OUT").map { s =>
       val Array(dir, suffix) = s.split(",", 2); (dir, suffix)
     }
+    val lastRun = new AtomicReference[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        lastRun.set(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
     names.foreach { n =>
       try {
         val df = graft.SparkEntry.queries(n)(spark, sfDir)
         out match {
           case Some((dir, suffix)) =>
-            val txt = df.queryExecution.explainString(
-                org.apache.spark.sql.execution.FormattedMode)
+            df.write.format("noop").mode("overwrite").save()
+            GraftInterop.drainListeners(spark.sparkContext)
+            val txt = lastRun.get.explainString(FormattedMode)
               .replaceAll("#\\d+", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
             java.nio.file.Files.write(
               java.nio.file.Paths.get(s"$dir/${n}_$suffix.txt"),
@@ -46,8 +62,7 @@ object Plans {
             println(s"$n written")
           case None =>
             println(s"\n========== $n ==========")
-            println(df.queryExecution.explainString(
-              org.apache.spark.sql.execution.SimpleMode))
+            println(df.queryExecution.explainString(SimpleMode))
         }
       } catch { case e: Throwable =>
         System.err.println(s"[plans] $n failed: ${e.getMessage}")

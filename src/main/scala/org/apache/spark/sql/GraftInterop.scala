@@ -20,6 +20,11 @@ object GraftInterop {
   def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Blocks until every event posted to the (private) listener bus so far
+    * has reached the listeners, so job counts read after an action are
+    * complete, late job-end events included. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** `localCheckpoint` with a bounded size estimate.
     *
     * Spark 4's `Dataset.localCheckpoint` eagerly carries the ORIGINAL

@@ -2,7 +2,7 @@ package graft.api
 
 import graft.sql.TestSpark
 import graft.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftInterop}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -136,9 +136,9 @@ class KnnJoinSpec extends AnyFunSuite {
         override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
           jobs.incrementAndGet()
       }
-      org.apache.spark.ListenerDrain(sc)
+      GraftInterop.drainListeners(sc)
       sc.addSparkListener(listener)
-      try { f; org.apache.spark.ListenerDrain(sc) } finally sc.removeSparkListener(listener)
+      try { f; GraftInterop.drainListeners(sc) } finally sc.removeSparkListener(listener)
       jobs.get()
     }
     val counts = Seq(false, true).map { decayed =>
