@@ -788,8 +788,9 @@ object SparkEntry {
 
     // sjoin how="left" (r9): all left rows survive; unmatched carry null
     // right columns. Both strategies produce identical results — g48 runs
-    // the broadcast plan, g49 the grid plan (matched set via id-only
-    // left-anti union, no new shuffle class). Oracle = DuckDB LEFT JOIN.
+    // the broadcast plan (a native left-outer indexed join), g87 the grid
+    // plan (matched set via id-only left-anti union, no new shuffle
+    // class). Oracle = DuckDB LEFT JOIN.
     "g48_sjoin_left" -> ((s, d) => {
       GeoDataFrame(customerPts(s, d))
         .sjoin(GeoDataFrame(regionTris(s, d)), predicate = "within",
@@ -1418,8 +1419,8 @@ object SparkEntry {
 
     // planner strategy through plain spark.sql (no GeoDataFrame API): the
     // st_within join with the small triangle side plans as
-    // IndexedSpatialJoinExec (plans/IndexedSpatialJoin.scala) — same result
-    // contract as g03, different entry point and physical route
+    // IndexedSpatialJoinExec (plans/IndexedSpatialJoin.scala) — g03's
+    // join and plan, written in SQL
     "g75_sql_spatial_join" -> ((s, d) => {
       customerPts(s, d).createOrReplaceTempView("g75_pts")
       regionTris(s, d).createOrReplaceTempView("g75_tris")

@@ -4,7 +4,7 @@ import graft.geom.{Envelope, Geometry, GeometryCollection, Polygon, Wkb}
 import graft.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, IntegerType, Metadata, MetadataBuilder}
+import org.apache.spark.sql.types.{BinaryType, DoubleType, Metadata, MetadataBuilder}
 
 /** Distributed geospatial table: a thin wrapper over DataFrame carrying
   *  - the active geometry column name (reference `GeoDataFrame` keeps it in
@@ -722,9 +722,10 @@ final case class GeoDataFrame(
     * only, like the reference `sjoin.py:53-54`).
     *
     * Strategies:
-    *  - `"broadcast"`: broadcast the right side; becomes a
-    *    BroadcastNestedLoopJoin with the predicate expression. Right for
-    *    dimension-table-sized right sides.
+    *  - `"broadcast"`: a join with the right side hinted `BROADCAST`,
+    *    which [[graft.plans.IndexedSpatialJoinStrategy]] plans as the
+    *    indexed broadcast join (how="left" is its native left-outer join).
+    *    Right for dimension-table-sized right sides.
     *  - `"grid"`: both sides large — the exactly-once grid equi-join that
     *    [[graft.plans.GridJoin]] builds (the SQL rule
     *    [[graft.plans.SpatialJoinRewrite]] emits the same plan), in place of
@@ -733,8 +734,8 @@ final case class GeoDataFrame(
     *    (origin-anchored fixed grid — ZERO eager scans, the 100 TB path),
     *    known `spatialPartitions` envelopes on both sides (driver metadata
     *    only), or one combined bounds job over both inputs.
-    *  - `"auto"`: grid when both sides have >broadcastThreshold rows hint,
-    *    else broadcast.
+    *  - `"auto"`: broadcast when the right side is small by the strategy's
+    *    `isSmall` test, else grid.
     *
     * `oversized` (grid-with-cellSize only) controls rows whose envelope
     * spans more grid cells than the per-row explode budget (2^22):
@@ -788,12 +789,21 @@ final case class GeoDataFrame(
     require(Set("fail", "sentinel").contains(oversized),
       s"unknown oversized policy '$oversized' (fail | sentinel)")
     // left/right outer (geopandas sjoin how=, one notch past the
-    // inner-only reference, sjoin.py:53-54): the preserved side carries a
-    // row id through the inner plan; unmatched rows come back via a
+    // inner-only reference, sjoin.py:53-54). The broadcast join does
+    // how="left" natively; otherwise the preserved side carries a row id
+    // through the inner plan, and unmatched rows come back via a
     // left-anti on the matched-id set (id-only exchange, no new shuffle
     // class) and union in with the other side's columns null.
     require(Set("inner", "left", "right").contains(how),
       s"unknown sjoin how '$how' (inner | left | right)")
+    val useBroadcast = strategy == "broadcast" || strategy == "auto" && {
+      val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+      // cheap: leaf stats, no count; unknown stats are not small
+      try graft.plans.IndexedSpatialJoinStrategy.isSmall(
+        right.df.queryExecution.optimizedPlan, threshold)
+      catch { case scala.util.control.NonFatal(_) => false }
+    }
+    val nativeOuter = useBroadcast && how == "left"
 
     val rowId = "_sjoin_row_id"
     // The id-stamped side feeds TWO plan branches (the inner join and the
@@ -806,7 +816,7 @@ final case class GeoDataFrame(
     def preserved(side: DataFrame, preserve: Boolean): DataFrame =
       if (preserve) side.withColumn(rowId, monotonically_increasing_id()).localCheckpoint()
       else side
-    val leftDf = preserved(df, how == "left")
+    val leftDf = preserved(df, how == "left" && !nativeOuter)
     // disambiguate column names like geopandas' suffixing
     val (rightSuffixed, rGeomName) = suffixed(right, rsuffix)
     val rightRenamed = preserved(rightSuffixed, how == "right")
@@ -835,15 +845,15 @@ final case class GeoDataFrame(
       case other                => throw new IllegalArgumentException(s"unknown predicate $other")
     }
 
-    val inner = strategy match {
-      case "broadcast" | "auto" if strategy == "broadcast" || rightIsSmall(right) =>
-        if (indexedBroadcastEnabled)
-          indexedBroadcastInner(leftDf, rightRenamed, rGeomName, predicate,
-            distance, onAttribute, rsuffix)
-        else
-          leftDf.join(broadcast(rightRenamed),
-            pred(leftDf(geometryColumn), rightRenamed(rGeomName)) && attrEq, "inner")
-      case _ =>
+    val inner =
+      if (useBroadcast) {
+        // without graft's planner strategy this would silently run as a
+        // nested-loop join
+        graft.sql.functions.install(df.sparkSession)
+        leftDf.join(broadcast(rightRenamed),
+          pred(leftDf(geometryColumn), rightRenamed(rGeomName)) && attrEq,
+          if (nativeOuter) "left_outer" else "inner")
+      } else {
         // cell kernels bind to their side; the refine and emit tests name the
         // geometries, resolved against the joined sides
         val (lg, rg) = (leftDf(geometryColumn), rightRenamed(rGeomName))
@@ -965,11 +975,11 @@ final case class GeoDataFrame(
             twoLevel.unionByName(meet)
           }
         }
-    }
+      }
     how match {
-      case "inner" => inner
-      case "left"  => withUnmatched(inner, leftDf, rowId)
-      case "right" => withUnmatched(inner, rightRenamed, rowId)
+      case "left" if !nativeOuter => withUnmatched(inner, leftDf, rowId)
+      case "right"                => withUnmatched(inner, rightRenamed, rowId)
+      case _                      => inner
     }
   }
 
@@ -1264,13 +1274,14 @@ final case class GeoDataFrame(
     if (df.columns.contains(c)) c + rsuffix else c
 
   /** Nearest-neighbor join against a SMALL right side (geopandas
-    * `sjoin_nearest`, unbounded by default): the right side is collected,
-    * broadcast, and STR-tree-indexed once
+    * `sjoin_nearest`, unbounded by default), planned as the indexed
+    * broadcast join ([[graft.plans.NearestJoin]]): the right side is
+    * collected, broadcast, and STR-tree-indexed once
     * ([[graft.sql.PreparedSide]]), and each left row finds its true
-    * nearest right rows by branch-and-bound inside a codegen'd expression
-    * — no grid, no window exchange, no `leftKey` uniqueness contract (the
-    * per-row minimum is computed per row, so duplicate-key pooling cannot
-    * happen). The join finishes as an integer BroadcastHashJoin.
+    * nearest right rows by branch-and-bound — no grid, no window exchange,
+    * no `leftKey` uniqueness contract (the per-row minimum is computed per
+    * row, so duplicate-key pooling cannot happen). Output: the left
+    * columns, `distanceCol`, the right columns (suffixed like sjoin's).
     *
     * Semantics match [[sjoinNearest]]: every tie at the minimum distance
     * is kept, `maxDistance` (optional here) is inclusive, `exclusive=true`
@@ -1318,25 +1329,23 @@ final case class GeoDataFrame(
       distanceCol: String,
       how: String,
       exclusive: Boolean): DataFrame = {
+    import org.apache.spark.sql.GraftInterop.{expression, ofRows}
     require(Set("inner", "left").contains(how),
       s"unknown nearest-join how '$how' (inner | left)")
+    val spark = df.sparkSession
+    // NearestJoin has no physical plan without graft's planner strategy
+    graft.sql.functions.install(spark)
     val (rightRenamed, rGeomName) = suffixed(right, rsuffix)
-    val (bc, localRight, idxCol) = prepareBroadcastSide(rightRenamed, rGeomName)
-    val probe = org.apache.spark.sql.GraftInterop.column(
-      graft.sql.IndexedNearestProbe(
-        org.apache.spark.sql.GraftInterop.expression(df(geometryColumn)),
-        maxDistance, exclusive, bc, k))
-    val nnCol = freshCol("_sjoin_nn", df.columns, rightRenamed.columns, Seq(distanceCol))
-    val exploded = how match {
-      case "inner" => df.withColumn(nnCol, explode(probe))
-      case "left"  => df.withColumn(nnCol, explode_outer(probe))
-    }
-    exploded
-      .withColumn(idxCol, col(nnCol)("idx"))
-      .withColumn(distanceCol, col(nnCol)("dist"))
-      .drop(nnCol)
-      .join(broadcast(localRight), Seq(idxCol), if (how == "left") "left" else "inner")
-      .drop(idxCol)
+    // the distance replaces a left column of the same name
+    val left = if (df.columns.contains(distanceCol)) df.drop(distanceCol) else df
+    ofRows(spark, graft.plans.NearestJoin(left.queryExecution.analyzed,
+      rightRenamed.queryExecution.analyzed,
+      expression(spark, left(geometryColumn)), expression(spark, rightRenamed(rGeomName)),
+      k, maxDistance, exclusive,
+      org.apache.spark.sql.catalyst.expressions.AttributeReference(
+        distanceCol, DoubleType, nullable = false)(),
+      if (how == "left") org.apache.spark.sql.catalyst.plans.LeftOuter
+      else org.apache.spark.sql.catalyst.plans.Inner))
   }
 
   /** DataFrame-level overlay (geopandas `overlay(df1, df2, how=...)`;
@@ -1569,63 +1578,6 @@ final case class GeoDataFrame(
     this
   }
 
-  /** Indexed broadcast sjoin (default on; `spark.graft.sjoin.broadcast.index`
-    * = false restores the nested-loop plan). The nested-loop broadcast join
-    * evaluates the exact predicate — with a fresh WKB decode of BOTH sides —
-    * for every (probe, build) pair: O(N·M) decodes + kernels. This path
-    * collects the small side ONCE at the driver (the same driver-side
-    * materialization Spark itself performs to broadcast a nested-loop build
-    * side, so the memory contract is unchanged), ships the compact WKB as a
-    * broadcast [[graft.sql.PreparedSide]] (decoded + STR-tree-indexed lazily
-    * once per executor), and probes it from a codegen'd expression that
-    * returns matching build-row indices. The join finishes as an integer
-    * BroadcastHashJoin against the collected rows: per probe row the cost is
-    * one decode + an O(log M) tree walk + exact kernels on true candidates
-    * only. `onAttribute` equalities are checked on the joined candidates —
-    * the same refinement position as the nested-loop plan's join condition.
-    */
-  private def indexedBroadcastInner(leftDf: DataFrame, rightRenamed: DataFrame,
-      rGeomName: String, predicate: String, distance: Double,
-      onAttribute: Seq[String], rsuffix: String): DataFrame = {
-    val (bc, localRight, idxCol) = prepareBroadcastSide(rightRenamed, rGeomName)
-    val probe = org.apache.spark.sql.GraftInterop.column(
-      graft.sql.IndexedSjoinProbe(
-        org.apache.spark.sql.GraftInterop.expression(leftDf(geometryColumn)),
-        predicate, distance, bc))
-    val attrEqByName = onAttribute
-      .map(a => col(a) === col(a + rsuffix))
-      .foldLeft(lit(true))(_ && _)
-    leftDf.withColumn(idxCol, explode(probe))
-      .join(broadcast(localRight), Seq(idxCol), "inner")
-      .filter(attrEqByName)
-      .drop(idxCol)
-  }
-
-  /** Collect and broadcast the small side of an indexed spatial join ONCE:
-    * the compact WKB ships as a [[graft.sql.PreparedSide]] (decoded +
-    * STR-tree'd lazily per executor), and the full rows come back as an
-    * index-stamped local relation for the integer BroadcastHashJoin finish.
-    * Driver memory contract matches Spark's own broadcast-join collect.
-    */
-  private def prepareBroadcastSide(rightRenamed: DataFrame, rGeomName: String)
-      : (org.apache.spark.broadcast.Broadcast[graft.sql.PreparedSide], DataFrame, String) = {
-    val spark = df.sparkSession
-    val rows = rightRenamed.collect()
-    val gi = rightRenamed.schema.fieldIndex(rGeomName)
-    val wkbs = rows.map(r => if (r.isNullAt(gi)) null else r.getAs[Array[Byte]](gi))
-    val bc = spark.sparkContext.broadcast(new graft.sql.PreparedSide(wkbs))
-    // the index column is stamped onto BOTH sides of the finishing hash
-    // join, so it must collide with neither schema
-    val idxCol = freshCol("_sjoin_prep_idx", df.columns, rightRenamed.columns)
-    val idxSchema = rightRenamed.schema.add(idxCol, IntegerType, nullable = false)
-    val idxRows = rows.toSeq.zipWithIndex.map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-    }
-    val localRight = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(idxRows).asJava, idxSchema)
-    (bc, localRight, idxCol)
-  }
-
   /** Collision-free internal scratch-column name: the base name unless a
     * user column already carries it, else the first `base1`, `base2`, …
     * free in every supplied schema — the same survival contract the
@@ -1635,24 +1587,6 @@ final case class GeoDataFrame(
     val taken = schemas.flatten.toSet
     if (!taken.contains(base)) base
     else Iterator.from(1).map(base + _).find(n => !taken.contains(n)).get
-  }
-
-  private def indexedBroadcastEnabled: Boolean =
-    df.sparkSession.conf.get("spark.graft.sjoin.broadcast.index", "true").toBoolean
-
-  private def rightIsSmall(right: GeoDataFrame): Boolean = {
-    // cheap heuristic without forcing a count: leaf file size if available.
-    // Follow the session's broadcast threshold; when broadcasting is
-    // disabled (threshold <= 0), nothing is "small" and auto picks the grid.
-    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (threshold <= 0) return false
-    val sizeBytes = try {
-      right.df.queryExecution.optimizedPlan.stats.sizeInBytes
-    } catch { case _: Throwable => BigInt(Long.MaxValue) }
-    // WKB expands in memory vs parquet-encoded stats, so the stats must fit
-    // WITH the expansion factor applied — multiplying the threshold instead
-    // (as an earlier version did) broadcast sides 8x too big
-    sizeBytes * 8 < BigInt(threshold)
   }
 
   /** Density-based spatial clustering over POINT rows (the PostGIS

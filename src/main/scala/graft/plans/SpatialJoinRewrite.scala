@@ -36,15 +36,6 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] {
 
   val CELL_SIZE_KEY = "spark.graft.sjoin.grid.cellSize"
 
-  /** Predicates that imply envelope overlap of the pair — the invariant the
-    * cell join relies on. st_dwithin is handled separately with
-    * distance-expanded cells: padding one side's envelope by d restores the
-    * invariant (dist <= d implies expand(env(a), d) overlaps env(b)).
-    */
-  private val SUPPORTED = Set("st_intersects", "st_contains", "st_within",
-    "st_covers", "st_coveredby", "st_containsproperly", "st_touches",
-    "st_crosses", "st_overlaps", "st_equals")
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     // a malformed conf value must not fail EVERY query in the session
     // from inside an optimizer rule — warn once and stand down
@@ -57,31 +48,25 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] {
     plan.transform {
       case j @ Join(left, right, Inner, Some(cond), hint)
           if cond.deterministic && isLarge(left) && isLarge(right) =>
-        def sided(a: Expression, b: Expression): Boolean =
-          a.references.nonEmpty && b.references.nonEmpty &&
-            a.references.subsetOf(left.outputSet) &&
-            b.references.subsetOf(right.outputSet)
+        val sided = PlanPredicates.sided(left, right) _
+        val supported = PlanPredicates.Kernels.contains _
         val conjuncts = PlanPredicates.splitConjuncts(cond)
         // any equi key -> Spark's hash join on that key is the better
         // frame (the same decline IndexedSpatialJoinStrategy applies):
         // exploding both sides by cells on TOP of an equality key only
-        // multiplies the shuffle
-        val hasEquiKey = conjuncts.exists {
-          case EqualTo(a, b)       => sided(a, b) || sided(b, a)
-          case EqualNullSafe(a, b) => sided(a, b) || sided(b, a)
-          case _                   => false
-        }
+        // multiplies the shuffle.
         // (left geometry, right geometry, optional dwithin distance pad)
-        val spatial = if (hasEquiKey) None else conjuncts.collectFirst {
-          case GraftScalar(name, Seq(a, b)) if SUPPORTED(name) && sided(a, b) =>
-            (a, b, None)
-          case GraftScalar(name, Seq(a, b)) if SUPPORTED(name) && sided(b, a) =>
-            (b, a, None)
-          case GraftScalar("st_dwithin", Seq(a, b, d)) if d.foldable && sided(a, b) =>
-            (a, b, Some(d))
-          case GraftScalar("st_dwithin", Seq(a, b, d)) if d.foldable && sided(b, a) =>
-            (b, a, Some(d))
-        }
+        val spatial = if (PlanPredicates.hasEquiKey(conjuncts, left, right)) None
+          else conjuncts.collectFirst {
+            case GraftScalar(name, Seq(a, b)) if supported(name) && sided(a, b) =>
+              (a, b, None)
+            case GraftScalar(name, Seq(a, b)) if supported(name) && sided(b, a) =>
+              (b, a, None)
+            case GraftScalar("st_dwithin", Seq(a, b, d)) if d.foldable && sided(a, b) =>
+              (a, b, Some(d))
+            case GraftScalar("st_dwithin", Seq(a, b, d)) if d.foldable && sided(b, a) =>
+              (b, a, Some(d))
+          }
         spatial match {
           case None => j
           case Some((lGeom, rGeom, pad)) =>
@@ -108,13 +93,50 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] {
   }
 }
 
-/** Conjunct splitter shared by the plans package — ONE definition so a
-  * later refinement (e.g. stripping wrapper nodes) cannot drift between
-  * the rule and the strategy.
+/** Join-condition analysis shared by [[SpatialJoinRewrite]] and
+  * [[IndexedSpatialJoinStrategy]] — ONE definition so a later refinement
+  * (e.g. stripping wrapper nodes) cannot drift between the rule and the
+  * strategy.
   */
 private[plans] object PlanPredicates {
+  /** The `st_*` predicates both joins plan, by SQL name, with the
+    * `PreparedSide.kernel` name each refines with. All imply envelope
+    * overlap of the pair — the invariant the grid join and the tree walk
+    * rely on. st_dwithin is handled apart, with distance-expanded
+    * envelopes: dist <= d implies expand(env(a), d) overlaps env(b).
+    */
+  val Kernels: Map[String, String] = Map(
+    "st_intersects"       -> "intersects",
+    "st_contains"         -> "contains",
+    "st_within"           -> "within",
+    "st_covers"           -> "covers",
+    "st_coveredby"        -> "covered_by",
+    "st_containsproperly" -> "contains_properly",
+    "st_touches"          -> "touches",
+    "st_crosses"          -> "crosses",
+    "st_overlaps"         -> "overlaps",
+    "st_equals"           -> "equals")
+
   def splitConjuncts(e: Expression): Seq[Expression] = e match {
     case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
     case other     => Seq(other)
+  }
+
+  /** `a` reads columns of `left` only and `b` of `right` only. */
+  def sided(left: LogicalPlan, right: LogicalPlan)(a: Expression, b: Expression): Boolean =
+    a.references.nonEmpty && b.references.nonEmpty &&
+      a.references.subsetOf(left.outputSet) &&
+      b.references.subsetOf(right.outputSet)
+
+  /** Some conjunct equates a `left` and a `right` expression: an equi key
+    * Spark's hash join plans on.
+    */
+  def hasEquiKey(conjuncts: Seq[Expression], left: LogicalPlan, right: LogicalPlan): Boolean = {
+    val s = sided(left, right) _
+    conjuncts.exists {
+      case EqualTo(a, b)       => s(a, b) || s(b, a)
+      case EqualNullSafe(a, b) => s(a, b) || s(b, a)
+      case _                   => false
+    }
   }
 }

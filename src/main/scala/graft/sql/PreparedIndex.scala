@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression,
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
 import org.apache.spark.sql.GraftInterop.AbsType
 import graft.geom.{Envelope, Geometry, Predicates, StrTree, Wkb}
 
@@ -58,10 +58,7 @@ object PreparedSide {
   /** Shared candidate refinement: tree query + the dwithin envelope-gap
     * lower bound + lazy probe decode, invoking `emit(i)` for every build
     * index whose exact kernel passes (`probeFirst` puts the probe
-    * geometry in the predicate's first argument slot). BOTH consumers —
-    * [[IndexedSjoinProbe.candidates]] and `IndexedSpatialJoinExec` —
-    * drive THIS loop, so their documented bit-for-bit agreement holds by
-    * construction instead of by parallel maintenance. Returns the tree
+    * geometry in the predicate's first argument slot). Returns the tree
     * candidate count (the metric feed).
     */
   def visitCandidates(side: PreparedSide, bytes: Array[Byte],
@@ -94,86 +91,21 @@ object PreparedSide {
     }
     cand.length
   }
-}
 
-/** Catalyst expression: indices of broadcast-side rows matching the probe
-  * geometry under `predicate` — `array<int>` feeding an `explode` and an
-  * integer equi-join against the (small) build side, which Spark plans as a
-  * BroadcastHashJoin. The expensive spatial work happens HERE, once per
-  * probe row, inside whole-stage codegen (doGenCode calls straight into
-  * this instance via a codegen reference — same pattern as GraftScalar).
-  *
-  * `predicate = "dwithin"` queries the tree with the probe envelope
-  * expanded by `distance` and applies the same envelope-distance lower
-  * bound short-circuit as the scalar `st_dwithin` before decoding.
-  */
-case class IndexedSjoinProbe(
-    child: Expression,
-    predicate: String,
-    distance: Double,
-    index: Broadcast[PreparedSide])
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbsType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = s"st_indexed_$predicate"
-
-  @transient private lazy val kern: (Geometry, Geometry) => Boolean =
-    if (predicate == "dwithin") null else PreparedSide.kernel(predicate)
-
-  def candidates(bytes: Array[Byte]): ArrayData = {
-    val out = new scala.collection.mutable.ArrayBuilder.ofInt
-    PreparedSide.visitCandidates(index.value, bytes, predicate, kern,
-      distance, probeFirst = true, out += _)
-    UnsafeArrayData.fromPrimitiveArray(out.result())
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    candidates(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sjoinProbe", this, classOf[IndexedSjoinProbe].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.candidates($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): IndexedSjoinProbe =
-    copy(child = newChild)
-}
-
-/** Catalyst expression: the broadcast-side rows NEAREST to the probe
-  * geometry — `array<struct<idx:int, dist:double>>` holding every tie at
-  * the minimum exact distance (the geopandas `sjoin_nearest` keep-all-ties
-  * contract), empty when nothing lies within `maxDistance`. Branch-and-bound
-  * over the prepared STR-tree: subtrees whose envelope gap cannot beat the
-  * running best are never visited, and the probe WKB is decoded only if at
-  * least one exact distance is evaluated. `exclusive` skips
-  * topologically-equal right geometries at distance 0 (shapely
-  * `query_nearest(exclusive=True)`).
-  */
-case class IndexedNearestProbe(
-    child: Expression,
-    maxDistance: Double,
-    exclusive: Boolean,
-    index: Broadcast[PreparedSide],
-    // k-nearest generalization (rank() <= k tie contract); k = 1 takes the
-    // single-pass tie-tracking nearest search
-    k: Int = 1)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbsType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("idx", IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("dist",
-        org.apache.spark.sql.types.DoubleType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "st_indexed_nearest"
-
-  def candidates(bytes: Array[Byte]): ArrayData = {
-    val side = index.value
+  /** The build rows nearest to the probe WKB, as (index, exact distance):
+    * every tie at the minimum distance for `k = 1` (the geopandas
+    * `sjoin_nearest` keep-all-ties contract), else the `rank() <= k` set.
+    * Empty when nothing lies within `maxDistance` or the probe is empty.
+    * Branch-and-bound over the tree: subtrees whose envelope gap cannot
+    * beat the running bound are never visited, and the probe is decoded
+    * only if one exact distance is evaluated. `exclusive` skips
+    * topologically-equal build geometries at distance 0 (shapely
+    * `query_nearest(exclusive=True)`).
+    */
+  def nearest(side: PreparedSide, bytes: Array[Byte], k: Int, maxDistance: Double,
+      exclusive: Boolean): Array[(Int, Double)] = {
     val probeEnv = Wkb.envelopeOf(bytes)
-    if (probeEnv.isEmpty)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+    if (probeEnv.isEmpty) return Array.empty
     var probe: Geometry = null
     val exact = { (i: Int) =>
       if (probe == null) probe = Wkb.read(bytes)
@@ -181,31 +113,11 @@ case class IndexedNearestProbe(
       val d = graft.geom.Measures.distance(probe, g)
       if (exclusive && d == 0.0 && Predicates.geomEquals(probe, g)) Double.NaN else d
     }
-    val hits: Array[(Int, Double)] =
-      if (k == 1) {
-        val (ties, best) = side.tree.nearest(probeEnv, maxDistance, exact)
-        ties.map(i => (i, best))
-      } else side.tree.kNearest(probeEnv, k, maxDistance, exact)
-    val rows = new Array[Any](hits.length)
-    var j = 0
-    while (j < hits.length) {
-      rows(j) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](hits(j)._1, hits(j)._2))
-      j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
+    if (k == 1) {
+      val (ties, best) = side.tree.nearest(probeEnv, maxDistance, exact)
+      ties.map(i => (i, best))
+    } else side.tree.kNearest(probeEnv, k, maxDistance, exact)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    candidates(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("nearestProbe", this, classOf[IndexedNearestProbe].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.candidates($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): IndexedNearestProbe =
-    copy(child = newChild)
 }
 
 /** Phase-1 summary of the right side of a two-phase kNN join: one entry

@@ -39,7 +39,9 @@ object Plans {
     // replaced by a placeholder there, so two dumps of the same plan diff
     // clean whatever ran before them.
     val out = sys.env.get("SPARK_GRAFT_PLAN_OUT").map { s =>
-      val Array(dir, suffix) = s.split(",", 2); (dir, suffix)
+      val Array(dir, suffix) = s.split(",", 2)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      (dir, suffix)
     }
     val lastRun = new AtomicReference[QueryExecution]()
     spark.listenerManager.register(new QueryExecutionListener {
@@ -47,7 +49,7 @@ object Plans {
         lastRun.set(qe)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     })
-    names.foreach { n =>
+    val failed = names.filterNot { n =>
       try {
         val df = graft.SparkEntry.queries(n)(spark, sfDir)
         out match {
@@ -64,10 +66,16 @@ object Plans {
             println(s"\n========== $n ==========")
             println(df.queryExecution.explainString(SimpleMode))
         }
+        true
       } catch { case e: Throwable =>
         System.err.println(s"[plans] $n failed: ${e.getMessage}")
+        false
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[plans] ${failed.size} of ${names.size} failed: ${failed.mkString(" ")}")
+      sys.exit(1)
+    }
   }
 }

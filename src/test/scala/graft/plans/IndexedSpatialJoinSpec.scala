@@ -15,9 +15,14 @@ class IndexedSpatialJoinSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def withStrategy[T](on: Boolean)(f: => T): T = {
-    spark.conf.set("spark.graft.sjoin.broadcast.index", on.toString)
-    try f finally spark.conf.unset("spark.graft.sjoin.broadcast.index")
+  /** Runs `f` with broadcasting off: a join with no hint then falls to
+    * Spark's nested-loop plans, the reference the indexed plan must match.
+    */
+  private def nestedLoop[T](f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   private lazy val pts: DataFrame = {
@@ -40,11 +45,11 @@ class IndexedSpatialJoinSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
 
   test("raw DataFrame join on st_within plans as IndexedSpatialJoin") {
-    val j = withStrategy(true) { pts.join(boxes, st_within(col("g"), col("bg"))) }
-    val plan = withStrategy(true) { j.queryExecution.executedPlan.toString }
+    val j = pts.join(boxes, st_within(col("g"), col("bg")))
+    val plan = j.queryExecution.executedPlan.toString
     assert(plan.contains("IndexedSpatialJoin"), plan)
-    val got = withStrategy(true) { rows(pts.join(boxes, st_within(col("g"), col("bg")))) }
-    val want = withStrategy(false) { rows(pts.join(boxes, st_within(col("g"), col("bg")))) }
+    val got = rows(pts.join(boxes, st_within(col("g"), col("bg"))))
+    val want = nestedLoop { rows(pts.join(boxes, st_within(col("g"), col("bg")))) }
     assert(got == want && got.nonEmpty)
   }
 
@@ -52,28 +57,51 @@ class IndexedSpatialJoinSpec extends AnyFunSuite {
     pts.createOrReplaceTempView("pts_isj")
     boxes.createOrReplaceTempView("boxes_isj")
     val q = "SELECT pid, bid FROM pts_isj JOIN boxes_isj ON st_intersects(g, bg)"
-    val got = withStrategy(true) {
+    val got = {
       val df = spark.sql(q)
       assert(df.queryExecution.executedPlan.toString.contains("IndexedSpatialJoin"))
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     }
-    val want = withStrategy(false) {
+    val want = nestedLoop {
       spark.sql(q).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     }
     assert(got == want && got.nonEmpty)
   }
 
+  test("a BROADCAST hint plans the indexed join with broadcasting off") {
+    pts.createOrReplaceTempView("pts_isj")
+    boxes.createOrReplaceTempView("boxes_isj")
+    val on = "FROM pts_isj JOIN boxes_isj ON st_within(g, bg)"
+    nestedLoop {
+      // the reference every spec here compares with: no hint, not indexed
+      val plain = spark.sql(s"SELECT pid, bid $on")
+      assert(!plain.queryExecution.executedPlan.toString.contains("IndexedSpatialJoin"))
+      for (hinted <- Seq(spark.sql(s"SELECT /*+ BROADCAST(boxes_isj) */ pid, bid $on"),
+          pts.join(broadcast(boxes), st_within(col("g"), col("bg"))),
+          // a hint on the stream side builds that side
+          broadcast(boxes).join(pts, st_contains(col("bg"), col("g"))))) {
+        val plan = hinted.queryExecution.executedPlan.toString
+        assert(plan.contains("IndexedSpatialJoin"), plan)
+        assert(rows(hinted) == rows(plain) && rows(plain).nonEmpty)
+      }
+      // a left outer join cannot build its preserved side: the hint on it
+      // is ignored, as Spark's own join selection ignores it
+      val ignored = broadcast(pts).join(boxes, st_within(col("g"), col("bg")), "left")
+      assert(!ignored.queryExecution.executedPlan.toString.contains("IndexedSpatialJoin"))
+    }
+  }
+
   test("swapped argument order (small side first arg) stays correct") {
     // st_contains(bg, g): first arg is the RIGHT side of the join below
     val q = () => pts.join(boxes, st_contains(col("bg"), col("g")))
-    val got = withStrategy(true) {
+    val got = {
       val df = q()
       assert(df.queryExecution.executedPlan.toString.contains("IndexedSpatialJoin"))
       rows(df)
     }
-    assert(got == withStrategy(false) { rows(q()) } && got.nonEmpty)
+    assert(got == nestedLoop { rows(q()) } && got.nonEmpty)
     // and the asymmetric predicate agrees with the within formulation
-    assert(got == withStrategy(true) { rows(pts.join(boxes, st_within(col("g"), col("bg")))) })
+    assert(got == rows(pts.join(boxes, st_within(col("g"), col("bg")))))
   }
 
   test("small LEFT side builds left (stream = the large right side)") {
@@ -87,46 +115,46 @@ class IndexedSpatialJoinSpec extends AnyFunSuite {
     try {
       val q = () => boxes.join(pts, st_contains(col("bg"), col("g")))
         .select(col("pid"), col("bid"))
-      val got = withStrategy(true) {
+      val got = {
         val df = q()
         assert(df.queryExecution.executedPlan.toString.contains("IndexedSpatialJoin"))
         rows(df)
       }
-      assert(got == withStrategy(false) { rows(q()) } && got.nonEmpty)
+      assert(got == nestedLoop { rows(q()) } && got.nonEmpty)
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("residual conjuncts apply (extra filter in the join condition)") {
     val cond = st_within(col("g"), col("bg")) && (col("pid") % 2 === 0) && (col("bid") < 20)
-    val got = withStrategy(true) {
+    val got = {
       val df = pts.join(boxes, cond)
       assert(df.queryExecution.executedPlan.toString.contains("IndexedSpatialJoin"))
       rows(df)
     }
-    val want = withStrategy(false) { rows(pts.join(boxes, cond)) }
+    val want = nestedLoop { rows(pts.join(boxes, cond)) }
     assert(got == want && got.nonEmpty)
     assert(got.forall { case (p, b) => p % 2 == 0 && b < 20 })
   }
 
   test("dwithin joins take the indexed plan with expanded probes") {
     val cond = st_dwithin(col("g"), col("bg"), lit(3.5))
-    val got = withStrategy(true) {
+    val got = {
       val df = pts.join(boxes, cond)
       assert(df.queryExecution.executedPlan.toString.contains("IndexedSpatialJoin"))
       rows(df)
     }
-    assert(got == withStrategy(false) { rows(pts.join(boxes, cond)) } && got.nonEmpty)
+    assert(got == nestedLoop { rows(pts.join(boxes, cond)) } && got.nonEmpty)
   }
 
   test("LEFT OUTER st_* joins take the indexed plan and null-pad") {
     val q = () => pts.join(boxes, st_within(col("g"), col("bg")), "left")
       .select(col("pid"), col("bid"))
-    val got = withStrategy(true) {
+    val got = {
       val df = q()
       assert(df.queryExecution.executedPlan.toString.contains("IndexedSpatialJoin"))
       df.collect().map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSeq.sorted
     }
-    val want = withStrategy(false) {
+    val want = nestedLoop {
       q().collect().map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSeq.sorted
     }
     assert(got == want && got.nonEmpty)
@@ -144,12 +172,12 @@ class IndexedSpatialJoinSpec extends AnyFunSuite {
       // small boxes LEFT, large pts RIGHT, right outer -> build left
       val q = () => boxes.join(pts, st_contains(col("bg"), col("g")), "right")
         .select(col("pid"), col("bid"))
-      val got = withStrategy(true) {
+      val got = {
         val df = q()
         assert(df.queryExecution.executedPlan.toString.contains("IndexedSpatialJoin"))
         df.collect().map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSeq.sorted
       }
-      val want = withStrategy(false) {
+      val want = nestedLoop {
         q().collect().map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSeq.sorted
       }
       assert(got == want && got.nonEmpty)
@@ -184,13 +212,13 @@ class IndexedSpatialJoinSpec extends AnyFunSuite {
       "st_touches" -> st_touches _, "st_crosses" -> st_crosses _,
       "st_overlaps" -> st_overlaps _, "st_equals" -> st_equals _)
     for ((name, p) <- preds) {
-      val got = withStrategy(true) {
+      val got = {
         val df = lg.join(rg, p(col("g"), col("bg")))
         assert(df.queryExecution.executedPlan.toString.contains("IndexedSpatialJoin"),
           s"$name did not plan indexed")
         rows(df)
       }
-      val want = withStrategy(false) { rows(lg.join(rg, p(col("g"), col("bg")))) }
+      val want = nestedLoop { rows(lg.join(rg, p(col("g"), col("bg")))) }
       assert(got == want, s"$name mismatch: got ${got.size}, want ${want.size}")
       assert(got.nonEmpty, s"$name produced no rows — fixture does not exercise it")
     }
@@ -200,7 +228,7 @@ class IndexedSpatialJoinSpec extends AnyFunSuite {
     val withK = boxes.withColumn("k", col("bid") % 5)
     val ptsK = pts.withColumn("k", col("pid") % 5)
     val cond = ptsK("k") === withK("k") && st_within(ptsK("g"), withK("bg"))
-    val df = withStrategy(true) { ptsK.join(withK, cond) }
+    val df = ptsK.join(withK, cond)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("IndexedSpatialJoin"), plan)
     // results still correct via Spark's own plan
@@ -217,15 +245,12 @@ class IndexedSpatialJoinSpec extends AnyFunSuite {
       val df = pts.join(boxes, st_within(col("g"), col("bg")))
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("IndexedSpatialJoin"), plan)
-      assert(rows(df) == withStrategy(false) {
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      val want = {
         spark.conf.unset("spark.graft.sjoin.grid.cellSize")
-        try rows(pts.join(boxes, st_within(col("g"), col("bg"))))
-        finally {
-          spark.conf.set("spark.graft.sjoin.grid.cellSize", "20.0")
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-        }
-      })
+        try nestedLoop(rows(pts.join(boxes, st_within(col("g"), col("bg")))))
+        finally spark.conf.set("spark.graft.sjoin.grid.cellSize", "20.0")
+      }
+      assert(rows(df) == want)
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.unset("spark.graft.sjoin.grid.cellSize")
