@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query and total
@@ -9,21 +9,37 @@ import org.apache.spark.sql.SparkSession
   * the computed columns away and time the wrong plan.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** SPARK_GRAFT_SF_DIR: the data set the queries read. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The benchmark's session: `local[SPARK_GRAFT_CPUS]` (default 4), one
+    * shuffle partition per core, AQE on. `graft.tools.Profile` starts from
+    * it too, so its figures are the benchmark's.
+    */
+  def sessionBuilder(): SparkSession.Builder = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  }
+
+  /** Runs every output column of `df`: a noop-format write. */
+  def force(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  /** `s` escaped for a JSON string literal. */
+  def jesc(s: String): String = s.flatMap {
+    case '"' => "\\\""; case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = Bench.sfDir
+    val spark = sessionBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.sql.functions.install(spark)
-
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
 
     // Warm up JIT + parquet reader + the operator paths the queries use
     // (expressions, joins, window exec, hash agg, text/vector kernels) on
@@ -128,7 +144,7 @@ object Bench {
     // first timed run otherwise folds one-off codegen/JIT cost into the
     // median (r8 recorded t24/t25 at ~2x their warm cost this way)
     def runMedian(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+        fn: (SparkSession, String) => DataFrame): Double = {
       try force(fn(spark, sfDir)) catch { case _: Throwable => () }
       val times = (1 to iters).flatMap { _ =>
         val t0 = System.nanoTime()
@@ -219,10 +235,6 @@ object Bench {
     // failed count rides along so a query regressing to all-failures can't
     // read as a total-seconds "speedup" in round-over-round deltas
     val failed = results.count(_._2 < 0)
-    def jesc(s: String): String = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
     // re-calibrate after the suite: a machine that degraded mid-run is
     // caught by whichever reading drifted
     val calAfter = calibrate()

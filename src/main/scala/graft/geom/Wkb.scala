@@ -76,7 +76,7 @@ object Wkb {
   /** Envelope straight from the WKB bytes — no Geometry, no coordinate
     * arrays. The envelope-consuming expressions (bbox filters, grid-cell
     * assignment, bounds aggregation) are decode-dominated (~84% of
-    * st_intersects wall time is `read`, see `tools/WkbProfile`); scanning
+    * st_intersects wall time is `read`, see PROFILE.md, round 6); scanning
     * min/max in place removes every allocation from those paths. Matches
     * `read(bytes).envelope` exactly: polygon envelopes come from the
     * exterior ring only (hole coords are skipped, as `Polygon.envelope`

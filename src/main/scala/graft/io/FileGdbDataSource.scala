@@ -236,8 +236,7 @@ private[io] final case class GdbReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GdbPartition]
     val rows = FileGdbIO.readChunkRows(sconf.value, tablePath, tablxPath,
-      p.start, p.n, p.width, meta.fields, meta.geom, forcePos = false,
-      want = want)
+      p.start, p.n, p.width, meta.fields, meta.geom, want = want)
     val residual: org.apache.spark.sql.Row => Boolean = bbox match {
       case Some((qx0, qy0, qx1, qy1)) if geomIdx >= 0 => { r =>
         val wkb = r.get(geomIdx).asInstanceOf[Array[Byte]]

@@ -749,8 +749,8 @@ object FileGdbIO {
     * writer's layout, so the chunk reads as one seek + a buffered
     * sequential stream (2 positioned reads PER ROW was the exact syscall
     * pathology the r13 FlatGeobuf soak measured at 17x; same fix here);
-    * non-ascending offsets (heavily edited gdbs) or `forcePos` fall back
-    * to positioned reads per row. `want` masks per-field decode (null =
+    * non-ascending offsets (heavily edited gdbs) fall back to positioned
+    * reads per row. `want` masks per-field decode (null =
     * all): unwanted values are SKIPPED at the byte level — variable-width
     * fields advance by their length only, and the geometry decode is
     * bypassed entirely on attribute-only scans.
@@ -758,7 +758,6 @@ object FileGdbIO {
   private[io] def readChunkRows(conf: org.apache.hadoop.conf.Configuration,
       tablePath: String, tablxPath: String, start: Int, n: Int, width: Int,
       fields: IndexedSeq[GdbField], geom: Option[GeomMeta],
-      forcePos: Boolean,
       want: Array[Boolean] = null): scala.collection.mutable.ArrayBuffer[Row] = {
     val tp = new Path(tablePath)
     val tfs = tp.getFileSystem(conf)
@@ -773,7 +772,7 @@ object FileGdbIO {
       offs(i) = off
       i += 1
     }
-    val ascending = !forcePos && {
+    val ascending = {
       var last = 0L; var asc = true
       offs.foreach { o => if (o != 0) { if (o < last) asc = false; last = o } }
       asc
@@ -962,7 +961,7 @@ object FileGdbIO {
           val start = b * EnvBlockRows
           val n = math.min(EnvBlockRows, slotsB - start)
           val rows = readChunkRows(sconf.value, tpB, txB, start, n, widthB,
-            fieldsB, geomB, forcePos = false, want = want)
+            fieldsB, geomB, want = want)
           val acc = Array(Double.NaN, Double.NaN, Double.NaN, Double.NaN)
           rows.foreach { r =>
             val w = r.get(giB).asInstanceOf[Array[Byte]]
@@ -1038,10 +1037,6 @@ object FileGdbIO {
     val (slots, width) = tablxHeaderOf(conf, tablxPath)
     val schema = sparkSchemaOf(meta, geometryColumn)
     val sconf = new GeoParquetIO.SerializableConf(conf)
-    // diagnostic: force the per-row positioned-read path (the pre-r14
-    // syscall shape) so GdbScanProfile can A/B the sequential fix
-    val forcePos = spark.conf
-      .get("spark.graft.gdb.forcePositionedReads", "false").toBoolean
     val fieldsB = meta.fields
     val geomB = meta.geom
     // bbox: chunks prune through the block-envelope index (the .gspx
@@ -1072,7 +1067,7 @@ object FileGdbIO {
       .parallelize(chunks, math.max(1, chunks.size))
       .flatMap { case (start, n) =>
         readChunkRows(sconf.value, tablePathB, tablxPathB, start, n, widthB,
-          fieldsB, geomB, forcePos)
+          fieldsB, geomB)
       }
     val filtered = (bbox, geomFieldIdx) match {
       case (Some((qx0, qy0, qx1, qy1)), gi) if gi >= 0 => rows.filter { r =>

@@ -78,9 +78,10 @@ object GraftDefs {
     if (m(0) eq b) return m(1).asInstanceOf[Geometry]
     if (m(2) eq b) return m(3).asInstanceOf[Geometry]
     val n = b.length
-    // below ~15 vertices the decode is cheaper than the probe (WkbProfile
-    // r10b: 0.83x on 5-pt boxes under slot thrashing, 1.5-1.9x on 64-256
-    // vertex rings); above 64 KiB the cache's per-thread memory bound wins
+    // below ~15 vertices the decode is cheaper than the probe (PROFILE.md,
+    // round 10b: 0.83x on 5-pt boxes under slot thrashing, 1.5-1.9x on
+    // 64-256 vertex rings); above 64 KiB the cache's per-thread memory
+    // bound wins
     if (n < 256 || n > (1 << 16)) return Wkb.read(b)
     // sampled hash: length + first/last 16 bytes — distinct WKB differs
     // in the type word or the first/last coordinates almost always, and a
@@ -100,11 +101,8 @@ object GraftDefs {
       g
     }
   }
-  // measurement hook for tools.WkbProfile (same code path g2 uses)
-  private[graft] def geomCachedForProfile(b: Array[Byte]): Geometry = geomC(b)
-
-  // envelope without decoding (WkbProfile: decode is ~84% of predicate
-  // wall time) — for every expression that consumes only the bbox
+  // envelope without decoding (PROFILE.md, round 6: decode is ~84% of
+  // predicate wall time) — for every expression that consumes only the bbox
   @inline private def env(v: Any): Envelope = Wkb.envelopeOf(v.asInstanceOf[Array[Byte]])
   // Literal long-array arguments (the hot-cell set of the two-level grid
   // sjoin) arrive as the SAME ArrayData object every row — a one-slot

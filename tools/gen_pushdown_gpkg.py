@@ -2,8 +2,9 @@
 """Generate an sf1-scale GeoPackage with a real R*-tree for the r13
 declarative-pushdown soak (driver-side tooling, like gen_gpkg_fixture.py;
 the Scala library only READS gpkg). 600k points uniform over [0,100]^2,
-deterministic hash coordinates — the same layout tools/PushdownSoak.scala
-generates for the other formats.
+deterministic hash coordinates — the same layout the closed PushdownSoak
+experiment generated for the other formats (restore it with
+`git show 6174e85:src/main/scala/graft/tools/PushdownSoak.scala`).
 
 Usage: gen_pushdown_gpkg.py [outPath [n]]
 """
