@@ -1,8 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → `<outDir>/<q>`
+  * parquet, plus oracle_sql.json with the oracle of every query it ran, for
+  * the DuckDB compare (`tools/compare_oracle.py`). Runs in `graft.Bench`'s
+  * session; every query runs, then the dump exits 1 naming those that
+  * threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
@@ -22,22 +24,18 @@ object Verify {
         sys.exit(2)
       }
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = Bench.sessionBuilder()
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(q => only.forall(_.contains(q._1))).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val qs = SparkEntry.queries.toSeq.filter(q => only.forall(_.contains(q._1)))
+    // a query that throws leaves no output behind: its directory goes first,
+    // so the compare finds it missing instead of comparing a stale one
+    val failed = graft.tools.Profile.pass(qs, "verify") { (name, fn) =>
+      val out = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+      out.getFileSystem(spark.sessionState.newHadoopConf()).delete(out, true)
+      fn(spark, sfDir).coalesce(1).write.parquet(out.toString)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -51,7 +49,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val ran = qs.map(_._1).toSet
+    val json = SparkEntry.oracleSql.filter(q => ran(q._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // oracle-validity probe: t05/t10's all-pairs DuckDB oracles match the
@@ -96,5 +95,9 @@ object Verify {
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} of ${qs.size} failed: ${failed.mkString(" ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -1,13 +1,8 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 connector for ESRI File Geodatabase layers (pure-JVM
   * OpenFileGDB reader, [[FileGdbIO]]):
@@ -34,32 +29,16 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * drop rows). `V2BboxPushdown` derives the bbox from plain `st_*`
   * filters.
   */
-class FileGdbDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "filegdb"
-  override def supportsExternalMetadata(): Boolean = true
+class FileGdbDataSource extends SpatialFileProvider(FileGdbFormat)
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FileGdbDataSource.schemaFor(options)
+private[io] object FileGdbFormat extends SpatialFileFormat {
+  /** (first row slot, slots, .gdbtablx offset width) */
+  type Chunk = (Int, Int, Int)
+  val name = "filegdb"
+  override def chunked: Boolean = true
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new GdbTable(schema, properties)
-}
-
-object FileGdbDataSource {
-  def pathOf(options: java.util.Map[String, String]): String =
-    V2Options.pathOf(options, "filegdb")
-  def layerOf(options: java.util.Map[String, String]): Option[String] =
-    Option(options.get("layer")).filter(_.nonEmpty)
-  def bboxOf(options: java.util.Map[String, String])
-      : Option[(Double, Double, Double, Double)] =
-    V2Options.bboxOf(options, "filegdb")
-  def chunkSizeOf(options: java.util.Map[String, String]): Int = {
-    val c = Option(options.get("chunkSize")).map(_.toInt).getOrElse(65536)
-    require(c > 0, s"filegdb: chunkSize must be positive (got $c) — a " +
-      "negative step would plan zero partitions and return an empty result")
-    c
-  }
+  private def layer(o: SpatialFileOptions): Option[String] = o.get("layer").filter(_.nonEmpty)
+  override def label(o: SpatialFileOptions): String = o.path + layer(o).map("#" + _).getOrElse("")
 
   /** (table path, TableMeta) for the selected layer — the driver-side
     * metadata unit every planning step needs. Memoized (bounded) keyed by
@@ -70,10 +49,9 @@ object FileGdbDataSource {
     */
   private val metaMemo = new java.util.concurrent.ConcurrentHashMap[
     String, (String, Long, FileGdbIO.TableMeta)]()
-  private[io] def metaFor(options: java.util.Map[String, String])
-      : (String, FileGdbIO.TableMeta) = {
+  private[io] def metaFor(o: SpatialFileOptions): (String, FileGdbIO.TableMeta) = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
-    val key = pathOf(options) + "#" + layerOf(options).getOrElse("")
+    val key = o.path + "#" + layer(o).getOrElse("")
     val hit = metaMemo.get(key)
     def stamp(tablePath: String): Long = {
       val tp = new org.apache.hadoop.fs.Path(tablePath)
@@ -87,8 +65,7 @@ object FileGdbDataSource {
       catch { case _: java.io.IOException => false })
     if (fresh) (hit._1, hit._3)
     else {
-      val (tablePath, _) =
-        FileGdbIO.resolveLayer(conf, pathOf(options), layerOf(options))
+      val (tablePath, _) = FileGdbIO.resolveLayer(conf, o.path, layer(o))
       val meta = FileGdbIO.tableMetaOf(conf, tablePath)
       // refresh existing keys even when the memo is full — a saturated
       // guard that skips puts would pin stale entries forever
@@ -98,171 +75,49 @@ object FileGdbDataSource {
     }
   }
 
-  private[io] def schemaFor(options: java.util.Map[String, String]): StructType =
-    FileGdbIO.sparkSchemaOf(metaFor(options)._2, "geometry")
-}
+  private def tablxOf(tablePath: String): String =
+    tablePath.stripSuffix(".gdbtable") + ".gdbtablx"
 
-private[graft] class GdbTable(tableSchema: StructType,
-    props: java.util.Map[String, String]) extends Table with SupportsRead {
-  private[graft] def graftGeomCol: Option[String] = {
-    val (_, meta) = FileGdbDataSource.metaFor(props)
-    if (meta.geom.isDefined) Some("geometry") else None
+  // the layer's fields in file order, the geometry named "geometry"
+  def schema(o: SpatialFileOptions): StructType =
+    FileGdbIO.sparkSchemaOf(metaFor(o)._2, "geometry")
+
+  def geometryColumn(o: SpatialFileOptions): Option[String] =
+    if (metaFor(o)._2.geom.isDefined) Some("geometry") else None
+
+  def planChunks(o: SpatialFileOptions,
+      bbox: Option[(Double, Double, Double, Double)]): Seq[Chunk] = {
+    val spark = SparkSession.active
+    val (tablePath, meta) = metaFor(o)
+    if (FileGdbIO.pruneOnExtent(spark) && !FileGdbIO.extentIntersects(meta, bbox)) Nil
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      val (slots, width) = FileGdbIO.tablxHeaderOf(conf, tablxOf(tablePath))
+      val all = (0 until slots by o.chunkSize).map(s => (s, math.min(o.chunkSize, slots - s)))
+      // chunk-prune through the block-envelope index (.gspx sidecar or the
+      // lazily memoized pass), exactly like the RDD path
+      val envIdx = bbox.flatMap(_ => Option(FileGdbIO.envIndexFor(spark, conf,
+        tablePath, tablxOf(tablePath), slots, width, meta)))
+      val kept = (bbox, envIdx) match {
+        case (Some((qx0, qy0, qx1, qy1)), Some(ei)) =>
+          all.filter { case (s0, n) => FileGdbIO.chunkIntersectsEnv(ei, s0, n, qx0, qy0, qx1, qy1) }
+        case _ => all
+      }
+      kept.map { case (s, n) => (s, n, width) }
+    }
   }
-  override def name(): String =
-    "filegdb:" + FileGdbDataSource.pathOf(props) +
-      FileGdbDataSource.layerOf(props).map("#" + _).getOrElse("")
-  override def schema(): StructType = tableSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = new java.util.HashMap[String, String](props)
-    merged.putAll(options)
-    new GdbScanBuilder(tableSchema, merged)
-  }
-}
 
-private[graft] class GdbScanBuilder(fullSchema: StructType,
-    options: java.util.Map[String, String])
-  extends ScanBuilder with SupportsPushDownRequiredColumns
-  with MetadataCountPushdown {
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override protected def countOptions: java.util.Map[String, String] = options
-  override protected def countSourceName: String = "filegdb"
-  override protected def buildDataScan(): Scan =
-    new GdbScan(fullSchema, required, options)
-
-  // COUNT(*) from the .gdbtable header's valid-row count — one 40-byte
-  // read, no tablx walk, no feature reads
-  override protected lazy val metadataCount: Option[Long] =
-    try Some(FileGdbDataSource.metaFor(options)._2.nRows.toLong)
+  // the .gdbtable header's valid-row count — one 40-byte read, no tablx
+  // walk, no feature reads
+  override def metadataCount(o: SpatialFileOptions): Option[Long] =
+    try Some(metaFor(o)._2.nRows.toLong)
     catch { case _: Exception => None }
 
-  override def build(): Scan = buildScan()
-}
-
-private[graft] class GdbScan(fullSchema: StructType, required: StructType,
-    options: java.util.Map[String, String]) extends Scan with Batch {
-
-  private val bbox = FileGdbDataSource.bboxOf(options)
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    "filegdb " + FileGdbDataSource.pathOf(options) +
-      bbox.map(b => s" bbox=$b").getOrElse("")
-
-  // V2BboxPushdown hooks (see ShapefileDataSource)
-  private[graft] lazy val graftGeomCol: Option[String] = {
-    val (_, meta) = FileGdbDataSource.metaFor(options)
-    if (meta.geom.isDefined) Some("geometry") else None
-  }
-  private[graft] def graftBbox: Option[(Double, Double, Double, Double)] = bbox
-  private[graft] def graftWithBbox(b: String): Scan = {
-    val m = new java.util.HashMap[String, String](options)
-    m.put("bbox", b)
-    new GdbScan(fullSchema, required, m)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val (tablePath, meta) = FileGdbDataSource.metaFor(options)
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val tablxPath = tablePath.stripSuffix(".gdbtable") + ".gdbtablx"
-    if (FileGdbIO.pruneOnExtent(SparkSession.active) &&
-        !FileGdbIO.extentIntersects(meta, bbox)) return Array.empty
-    val (slots, width) = FileGdbIO.tablxHeaderOf(conf, tablxPath)
-    val chunk = FileGdbDataSource.chunkSizeOf(options)
-    // chunk-prune through the block-envelope index (.gspx sidecar or the
-    // lazily memoized pass), exactly like the RDD path
-    val envIdx: Array[Double] =
-      if (bbox.isDefined && meta.geom.isDefined)
-        FileGdbIO.envIndexFor(SparkSession.active, conf, tablePath,
-          tablxPath, slots, width, meta)
-      else null
-    val all = (0 until slots by chunk)
-      .map(s => (s, math.min(chunk, slots - s)))
-    val kept = (bbox, Option(envIdx)) match {
-      case (Some((qx0, qy0, qx1, qy1)), Some(ei)) =>
-        all.filter { case (s0, n) =>
-          FileGdbIO.chunkIntersectsEnv(ei, s0, n, qx0, qy0, qx1, qy1) }
-      case _ => all
-    }
-    kept.map { case (s, n) => GdbPartition(s, n, width): InputPartition }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val (tablePath, meta) = FileGdbDataSource.metaFor(options)
-    val spark = SparkSession.active
-    val tablxPath = tablePath.stripSuffix(".gdbtable") + ".gdbtablx"
-    // byte-level decode mask + reorder computed against the FILE's
-    // schema, not the (possibly user-supplied, shorter or reordered)
-    // fullSchema — rows come back in file-field order, so both must map
-    // required names into FILE positions
-    val fileSchema = FileGdbIO.sparkSchemaOf(meta, "geometry")
-    val fileNames = fileSchema.fieldNames
-    required.fieldNames.foreach { n =>
-      require(fileNames.contains(n),
-        s"filegdb: column '$n' not in the layer (have: ${fileNames.mkString(", ")})")
-    }
-    val wantedNames = required.fieldNames.toSet
-    val want = fileNames.map(wantedNames.contains)
-    val geomIdx = meta.fields.indexWhere(_.ftype == 7)
-    // the residual needs the geometry bytes even when the projection
-    // pruned the column — decode it, drop it at reorder time
-    if (bbox.isDefined && geomIdx >= 0) want(geomIdx) = true
-    val reorder = required.fieldNames.map(n => fileSchema.fieldIndex(n))
-    GdbReaderFactory(
-      new GeoParquetIO.SerializableConf(spark.sessionState.newHadoopConf()),
-      tablePath, tablxPath, meta, want, bbox, geomIdx, reorder, required)
-  }
-}
-
-private[io] final case class GdbPartition(start: Int, n: Int, width: Int)
-  extends InputPartition
-
-private[io] final case class GdbReaderFactory(
-    sconf: GeoParquetIO.SerializableConf,
-    tablePath: String,
-    tablxPath: String,
-    meta: FileGdbIO.TableMeta,
-    want: Array[Boolean],
-    bbox: Option[(Double, Double, Double, Double)],
-    geomIdx: Int,
-    reorder: Array[Int],
-    required: StructType) extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GdbPartition]
-    val rows = FileGdbIO.readChunkRows(sconf.value, tablePath, tablxPath,
-      p.start, p.n, p.width, meta.fields, meta.geom, want = want)
-    val residual: org.apache.spark.sql.Row => Boolean = bbox match {
-      case Some((qx0, qy0, qx1, qy1)) if geomIdx >= 0 => { r =>
-        val wkb = r.get(geomIdx).asInstanceOf[Array[Byte]]
-        wkb != null && {
-          val e = graft.geom.Wkb.envelopeOf(wkb)
-          !e.isEmpty && e.minX <= qx1 && e.maxX >= qx0 &&
-            e.minY <= qy1 && e.maxY >= qy0
-        }
-      }
-      case _ => _ => true
-    }
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(required)
-    val it = rows.iterator.filter(residual)
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) {
-          val r = it.next()
-          val vals = reorder.map(i => r.get(i))
-          current = toCatalyst(org.apache.spark.sql.Row.fromSeq(
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(vals)))
-            .asInstanceOf[InternalRow]
-          true
-        } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+  def reader(o: SpatialFileOptions,
+      want: Array[Boolean]): (Configuration, Chunk) => Iterator[Row] = {
+    val (tablePath, meta) = metaFor(o)
+    val tablx = tablxOf(tablePath)
+    (conf, ch) => FileGdbIO.readChunkRows(conf, tablePath, tablx, ch._1, ch._2, ch._3,
+      meta.fields, meta.geom, want = want).iterator
   }
 }

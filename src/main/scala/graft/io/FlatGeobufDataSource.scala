@@ -1,13 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.Path
 
 /** DataSource V2 connector for FlatGeobuf v3: the pure-JVM reader behind
@@ -26,201 +22,65 @@ import org.apache.hadoop.fs.Path
   * on their header envelope, narrows surviving files to candidate feature
   * runs through the packed Hilbert R-tree, and applies the exact
   * envelope-intersects residual task-side. One Spark input partition per
-  * candidate run — the same scale plan as `FlatGeobufIO.read`.
+  * candidate run — the same scale plan as `FlatGeobufIO.read`. The format
+  * is also writable (`df.write.format("flatgeobuf")`, [[FgbWriteBuilder]]).
   *
   * Options: `bbox` (4 comma-separated doubles), `geometryColumn`
   * (default "geometry"), `chunkSize` (features per partition, default
   * 65536).
   */
-class FlatGeobufDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "flatgeobuf"
-  override def supportsExternalMetadata(): Boolean = true
+class FlatGeobufDataSource extends SpatialFileProvider(FlatGeobufFormat)
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val path = FlatGeobufDataSource.pathOf(options)
-    val meta = FlatGeobufIO.readMeta(SparkSession.active, path)
-    FlatGeobufIO.schemaOf(meta,
-      options.getOrDefault("geometryColumn", "geometry"), None)
-  }
+private[io] object FlatGeobufFormat extends SpatialFileFormat {
+  type Chunk = FlatGeobufIO.FgbChunk
+  val name = "flatgeobuf"
+  override def chunked: Boolean = true
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new FgbTable(schema, properties)
-}
+  // the property columns in header order, then the geometry
+  def schema(o: SpatialFileOptions): StructType =
+    FlatGeobufIO.schemaOf(FlatGeobufIO.readMeta(SparkSession.active, o.path),
+      o.geometryColumn, None)
 
-object FlatGeobufDataSource {
-  def pathOf(options: java.util.Map[String, String]): String = {
-    val p = options.get("path")
-    require(p != null && p.nonEmpty, "flatgeobuf: a single 'path' is required")
-    p
-  }
+  def geometryColumn(o: SpatialFileOptions): Option[String] = Some(o.geometryColumn)
 
-  def bboxOf(options: java.util.Map[String, String])
-      : Option[(Double, Double, Double, Double)] =
-    Option(options.get("bbox")).map { s =>
-      val a = s.split(",").map(_.trim.toDouble)
-      require(a.length == 4, s"flatgeobuf: bbox needs 4 numbers, got '$s'")
-      (a(0), a(1), a(2), a(3))
-    }
-}
-
-private[graft] class FgbTable(tableSchema: StructType,
-    props: java.util.Map[String, String])
-  extends Table with SupportsRead
-  with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  private[graft] def graftGeomCol: Option[String] =
-    Some(Option(props.get("geometryColumn")).getOrElse("geometry"))
-  override def name(): String = "flatgeobuf:" + FlatGeobufDataSource.pathOf(props)
-  override def schema(): StructType = tableSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // table properties carry the load-time options (path); scan options may
-    // add more — scan options win on conflict
-    val merged = new java.util.HashMap[String, String](props)
-    merged.putAll(options)
-    new FgbScanBuilder(tableSchema, merged)
-  }
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder = {
-    val merged = new java.util.HashMap[String, String](props)
-    merged.putAll(info.options)
-    new FgbWriteBuilder(info, merged)
-  }
-}
-
-private[graft] class FgbScanBuilder(fullSchema: StructType,
-    options: java.util.Map[String, String])
-  extends ScanBuilder with SupportsPushDownRequiredColumns
-  with MetadataCountPushdown {
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override protected def countOptions: java.util.Map[String, String] = options
-  override protected def countSourceName: String = "flatgeobuf"
-  override protected def buildDataScan(): Scan =
-    new FgbScan(fullSchema, required, options)
-
-  // COUNT(*) with no grouping and no bbox window answers from the FGB
-  // header's features_count — a few-KB header read per file, no feature
-  // data. features_count = 0 is the spec's "unknown" sentinel, so any
-  // zero (or a missing header) falls back to the full scan.
-  override protected lazy val metadataCount: Option[Long] =
-    try {
-      val spark = SparkSession.active
-      val conf = spark.sessionState.newHadoopConf()
-      val path = FlatGeobufDataSource.pathOf(options)
-      val fs = new Path(path).getFileSystem(conf)
-      val counts = FlatGeobufIO.fgbFiles(fs, path)
-        .map(f => FlatGeobufIO.readMeta(spark, f).featuresCount)
-      if (counts.nonEmpty && counts.forall(_ > 0L)) Some(counts.sum) else None
-    } catch { case _: Exception => None }
-
-  override def build(): Scan = buildScan()
-}
-
-private[graft] class FgbScan(fullSchema: StructType, required: StructType,
-    options: java.util.Map[String, String]) extends Scan with Batch {
-
-  private val path = FlatGeobufDataSource.pathOf(options)
-  private val bbox = FlatGeobufDataSource.bboxOf(options)
-  private val geomCol = Option(options.get("geometryColumn")).getOrElse("geometry")
-  private val chunkSize = Option(options.get("chunkSize")).map(_.toInt).getOrElse(65536)
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"flatgeobuf $path" + bbox.map(b => s" bbox=$b").getOrElse("")
-
-  // V2BboxPushdown hooks (see ShapefileDataSource)
-  private[graft] def graftGeomCol: Option[String] = Some(geomCol)
-  private[graft] def graftBbox: Option[(Double, Double, Double, Double)] = bbox
-  private[graft] def graftWithBbox(b: String): Scan = {
-    val m = new java.util.HashMap[String, String](options)
-    m.put("bbox", b)
-    new FgbScan(fullSchema, required, m)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
+  def planChunks(o: SpatialFileOptions,
+      bbox: Option[(Double, Double, Double, Double)]): Seq[Chunk] = {
     val spark = SparkSession.active
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new Path(path).getFileSystem(conf)
-    val files = FlatGeobufIO.fgbFiles(fs, path)
-    val metas = files.map(f => f -> FlatGeobufIO.readMeta(spark, f))
-    metas.flatMap { case (f, m) =>
+    val fs = new Path(o.path).getFileSystem(spark.sessionState.newHadoopConf())
+    FlatGeobufIO.fgbFiles(fs, o.path).flatMap { f =>
+      val m = FlatGeobufIO.readMeta(spark, f)
       val filePruned = (bbox, m.envelope) match {
         case (Some((qx0, qy0, qx1, qy1)), Some((fx0, fy0, fx1, fy1))) =>
           !(fx0 <= qx1 && fx1 >= qx0 && fy0 <= qy1 && fy1 >= qy0)
         case _ => false
       }
-      if (filePruned) Seq.empty
-      else FlatGeobufIO.planChunks(fs, f, m, chunkSize, bbox)
-          .map(ch => FgbPartition(ch.path, ch.start, ch.count): InputPartition)
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = SparkSession.active
-    val meta = FlatGeobufIO.readMeta(spark, path)
-    val cols = meta.columns
-    // canonical task row: required property columns in file order, geometry
-    // LAST (readChunk's contract) — then reordered to the required schema
-    val reqNames = required.fields.map(_.name)
-    val keptProps = cols.map(c => reqNames.contains(c.name))
-    val canonical = StructType(
-      cols.zip(keptProps).collect { case (c, true) => c.name }
-        .map(n => fullSchema(fullSchema.fieldIndex(n))).toSeq :+
-        StructField(geomCol, BinaryType))
-    val outIdx = {
-      val pos = canonical.fields.dropRight(1).map(_.name).zipWithIndex.toMap
-      cols.map(c => pos.getOrElse(c.name, -1))
-    }
-    val reorder: Array[Int] = reqNames.map { n =>
-      if (n == geomCol) canonical.length - 1 else canonical.fieldIndex(n)
-    }
-    FgbReaderFactory(
-      new GeoParquetIO.SerializableConf(spark.sessionState.newHadoopConf()),
-      cols, keptProps, outIdx, canonical.length, meta.geometryType, bbox,
-      reorder, required)
-  }
-}
-
-private[io] final case class FgbPartition(path: String, start: Long, count: Long)
-  extends InputPartition
-
-private[io] final case class FgbReaderFactory(
-    sconf: GeoParquetIO.SerializableConf,
-    cols: Array[FlatGeobufIO.FgbColumn],
-    wanted: Array[Boolean],
-    outIdx: Array[Int],
-    nOut: Int,
-    headerGt: Int,
-    bbox: Option[(Double, Double, Double, Double)],
-    reorder: Array[Int],
-    required: StructType) extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[FgbPartition]
-    val rows = FlatGeobufIO.readChunk(sconf.value,
-      FlatGeobufIO.FgbChunk(p.path, p.start, p.count),
-      cols, wanted, outIdx, nOut, headerGt, bbox)
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(required)
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (rows.hasNext) {
-          val r = rows.next()
-          val vals = reorder.map(i => r.get(i))
-          current = toCatalyst(org.apache.spark.sql.Row.fromSeq(
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(vals)))
-            .asInstanceOf[InternalRow]
-          true
-        } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
+      if (filePruned) Nil else FlatGeobufIO.planChunks(fs, f, m, o.chunkSize, bbox)
     }
   }
+
+  // COUNT(*) answers from the FGB header's features_count — a few-KB
+  // header read per file, no feature data. features_count = 0 is the
+  // spec's "unknown" sentinel, so any zero (or a missing header) declines.
+  override def metadataCount(o: SpatialFileOptions): Option[Long] =
+    try {
+      val spark = SparkSession.active
+      val fs = new Path(o.path).getFileSystem(spark.sessionState.newHadoopConf())
+      val counts = FlatGeobufIO.fgbFiles(fs, o.path)
+        .map(f => FlatGeobufIO.readMeta(spark, f).featuresCount)
+      if (counts.nonEmpty && counts.forall(_ > 0L)) Some(counts.sum) else None
+    } catch { case _: Exception => None }
+
+  def reader(o: SpatialFileOptions,
+      want: Array[Boolean]): (Configuration, Chunk) => Iterator[Row] = {
+    val meta = FlatGeobufIO.readMeta(SparkSession.active, o.path)
+    val (cols, gt) = (meta.columns, meta.geometryType)
+    val wantProps = want.init
+    val outIdx = cols.indices.toArray
+    (conf, ch) => FlatGeobufIO.readChunk(conf, ch, cols, wantProps, outIdx,
+      cols.length + 1, gt, None)
+  }
+
+  override def writer
+      : Option[(LogicalWriteInfo, java.util.Map[String, String]) => WriteBuilder] =
+    Some(new FgbWriteBuilder(_, _))
 }

@@ -40,8 +40,9 @@ private[io] class FgbWrite(info: LogicalWriteInfo,
 private[io] class FgbBatchWrite(schema: StructType, queryId: String,
     props: java.util.Map[String, String], doTruncate: Boolean) extends BatchWrite {
 
-  private val dir = FlatGeobufDataSource.pathOf(props)
-  private val geomCol = Option(props.get("geometryColumn")).getOrElse("geometry")
+  private val opts = new SpatialFileOptions(FlatGeobufFormat, props)
+  private val dir = opts.path
+  private val geomCol = opts.geometryColumn
   private val layer = Option(props.get("name")).getOrElse("layer")
   private val nodeSize = Option(props.get("nodeSize")).map(_.toInt).getOrElse(16)
   private val withIndex = Option(props.get("withIndex")).forall(_.toBoolean)

@@ -1,13 +1,8 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** DataSource V2 connector for GeoPackage feature tables (pure-JVM SQLite
   * b-tree reader):
@@ -27,325 +22,171 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * chunked into sorted point-lookup partitions and the exact
   * envelope-intersects residual runs task-side. SQLite records decode as
   * a unit, so column pruning trims row width but not record parsing.
+  * `COUNT(*)` answers from OGR's `gpkg_ogr_contents` when the file has it.
   */
-class GeoPackageDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "geopackage"
-  override def supportsExternalMetadata(): Boolean = true
+class GeoPackageDataSource extends SpatialFileProvider(SqliteFormat.GeoPackage)
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GeoPackageDataSource.schemaFor(
-      GeoPackageDataSource.pathOf(options), GeoPackageDataSource.tableOf(options))
+/** A `rowids == null` chunk walks each subtree in `subtreeRoots`
+  * (consecutive same-level b-tree subtrees, grouped so task count stays
+  * bounded); else it point-looks-up each rowid under `tableRoot`.
+  */
+private[io] final case class SqliteChunk(tableRoot: Long,
+    rowids: Array[Long], subtreeRoots: Array[Long])
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new GpkgTable(schema, properties)
-}
+/** A feature table of a SQLite file, named by its metadata dialect:
+  * "geopackage" (`gpkg_geometry_columns`, `rtree_<t>_<g>_node`, GP blobs)
+  * or "spatialite" (`geometry_columns`, `idx_<t>_<g>_node`, SpatiaLite
+  * blobs; a table missing from `geometry_columns` fails at planning rather
+  * than surface undecoded blobs). Option: `table` (required).
+  */
+private[io] final case class SqliteFormat(name: String) extends SpatialFileFormat {
+  type Chunk = SqliteChunk
+  private def spatialite: Boolean = name == "spatialite"
 
-object GeoPackageDataSource {
-  def pathOf(options: java.util.Map[String, String]): String =
-    V2Options.pathOf(options, "geopackage")
-  def tableOf(options: java.util.Map[String, String]): String = {
-    val t = options.get("table")
-    require(t != null && t.nonEmpty, "geopackage: the 'table' option is required")
+  private def table(o: SpatialFileOptions): String = {
+    val t = o.get("table").getOrElse("")
+    require(t.nonEmpty, s"$name: the 'table' option is required")
     t
   }
-  def bboxOf(options: java.util.Map[String, String])
-      : Option[(Double, Double, Double, Double)] =
-    V2Options.bboxOf(options, "geopackage")
+  override def label(o: SpatialFileOptions): String = o.path + "#" + table(o)
 
-  /** Geometry column of a feature table per the dialect's metadata
-    * (gpkg_geometry_columns / geometry_columns); memoized (bounded) so
-    * optimizer fixed-point iterations don't reopen the file or re-walk a
-    * real SpatiaLite file's ~6000-row spatial_ref_sys.
-    */
-  private val geomColMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[String]]()
-  private[graft] def geomColFor(path: String, table: String): Option[String] =
-    geomColForDialect(path, table, "gpkg")
-  private[graft] def geomColForDialect(path: String, table: String,
-      dialect: String): Option[String] = {
-    val key = dialect + "#" + path + "#" + table
-    val hit = geomColMemo.get(key)
+  // the DDL columns in order, the geometry forced to BinaryType
+  def schema(o: SpatialFileOptions): StructType = withTable(o) { (src, master, m) =>
+    val geomCol = geomColOf(src, master, o, strict = false)
+    StructType(GeoPackageIO.forceGeomBinary(GeoPackageIO.parseColumns(m.sql), geomCol)
+      .map(c => StructField(c.name, c.sparkType)))
+  }
+
+  // memoized (bounded) so optimizer fixed-point iterations don't reopen
+  // the file or re-walk a real SpatiaLite file's ~6000-row spatial_ref_sys
+  def geometryColumn(o: SpatialFileOptions): Option[String] = {
+    val key = name + "#" + o.path + "#" + table(o)
+    val hit = SqliteFormat.geomColMemo.get(key)
     if (hit != null) hit
     else {
-      val v =
-        try {
-          if (dialect == "spatialite") {
-            GeoPackageIO.resolveCI(
-              SpatiaLiteIO.geometryColumns(SparkSession.active, path), table)
-              .map(_._2._1)
-          } else {
-            val src = GeoPackageIO.openSource(
-              SparkSession.active.sessionState.newHadoopConf(), path)
-            try {
-              val master = GeoPackageIO.readMaster(src)
-              GeoPackageIO.resolveCI(
-                GeoPackageIO.featureMetaFrom(src, master), table).map(_._2._1)
-            } finally src.close()
-          }
-        } catch { case _: Exception => None }
-      if (geomColMemo.size < 1024) geomColMemo.put(key, v)
+      val v = try withTable(o)((src, master, _) => geomColOf(src, master, o, strict = false))
+        catch { case _: Exception => None }
+      if (SqliteFormat.geomColMemo.size < 1024) SqliteFormat.geomColMemo.put(key, v)
       v
     }
   }
 
-  private[io] def schemaFor(path: String, table: String,
-      dialect: String = "gpkg"): StructType = {
-    val spark = SparkSession.active
-    val src = GeoPackageIO.openSource(spark.sessionState.newHadoopConf(), path)
+  // the geometry column per the dialect's metadata. `strict` (reads)
+  // refuses a SpatiaLite table missing from geometry_columns, or with
+  // several geometry columns, by name instead of surfacing raw blobs
+  private def geomColOf(src: GeoPackageIO.PageSource, master: Seq[GeoPackageIO.Master],
+      o: SpatialFileOptions, strict: Boolean): Option[String] = {
+    val t = table(o)
+    if (!spatialite)
+      GeoPackageIO.resolveCI(GeoPackageIO.featureMetaFrom(src, master), t).map(_._2._1)
+    else {
+      if (strict)
+        SpatiaLiteIO.requireSingleGeom(SpatiaLiteIO.geometryColumnRows(src, master), t, o.path)
+      val g = GeoPackageIO.resolveCI(SpatiaLiteIO.geometryColumnsFrom(src, master), t)
+      require(!strict || g.isDefined, s"spatialite: table '$t' not in geometry_columns of ${o.path}")
+      g.map(_._2._1)
+    }
+  }
+
+  private def withTable[T](o: SpatialFileOptions)(
+      f: (GeoPackageIO.PageSource, Seq[GeoPackageIO.Master], GeoPackageIO.Master) => T): T = {
+    val src = GeoPackageIO.openSource(
+      SparkSession.active.sessionState.newHadoopConf(), o.path)
     try {
       val master = GeoPackageIO.readMaster(src)
-      val m = GeoPackageIO.findMaster(master, table).getOrElse(
-        throw new IllegalArgumentException(
-          s"no table '$table' in $path (tables: ${master.map(_.name).mkString(", ")})"))
-      // geometry column forced to BinaryType (GeoPackageIO.forceGeomBinary),
-      // resolved from the src + master already in hand — no second file
-      // open or spatial_ref_sys re-walk
-      val geomCol =
-        if (dialect == "spatialite")
-          GeoPackageIO.resolveCI(
-            SpatiaLiteIO.geometryColumnsFrom(src, master), m.name).map(_._2._1)
-        else
-          GeoPackageIO.resolveCI(
-            GeoPackageIO.featureMetaFrom(src, master), m.name).map(_._2._1)
-      val cols = GeoPackageIO.forceGeomBinary(GeoPackageIO.parseColumns(m.sql), geomCol)
-      StructType(cols.map(c =>
-        org.apache.spark.sql.types.StructField(c.name, c.sparkType)))
+      val m = GeoPackageIO.findMaster(master, table(o)).getOrElse(
+        throw new IllegalArgumentException(s"no table '${table(o)}' in ${o.path} " +
+          s"(tables: ${master.map(_.name).mkString(", ")})"))
+      f(src, master, m)
     } finally src.close()
   }
-}
 
-private[graft] class GpkgTable(tableSchema: StructType,
-    props: java.util.Map[String, String]) extends Table with SupportsRead {
-  private[graft] def graftGeomCol: Option[String] =
-    GeoPackageDataSource.geomColFor(
-      GeoPackageDataSource.pathOf(props), GeoPackageDataSource.tableOf(props))
-  override def name(): String =
-    "geopackage:" + GeoPackageDataSource.pathOf(props) + "#" +
-      GeoPackageDataSource.tableOf(props)
-  override def schema(): StructType = tableSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = new java.util.HashMap[String, String](props)
-    merged.putAll(options)
-    new GpkgScanBuilder(tableSchema, merged)
-  }
-}
-
-private[graft] class GpkgScanBuilder(fullSchema: StructType,
-    options: java.util.Map[String, String])
-  extends ScanBuilder with SupportsPushDownRequiredColumns
-  with MetadataCountPushdown {
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override protected def countOptions: java.util.Map[String, String] = options
-  override protected def countSourceName: String = "geopackage"
-  override protected def buildDataScan(): Scan =
-    new GpkgScan(fullSchema, required, options)
-
-  // COUNT(*) answers from OGR's gpkg_ogr_contents feature-count table
-  // when the file carries one (this repo's writer emits it; OGR maintains
-  // it via triggers) — a few page reads, no feature b-tree walk
-  override protected lazy val metadataCount: Option[Long] =
-    try {
-      val conf = SparkSession.active.sessionState.newHadoopConf()
-      val table = GeoPackageDataSource.tableOf(options)
-      val src = GeoPackageIO.openSource(conf,
-        GeoPackageDataSource.pathOf(options))
-      try {
-        GeoPackageIO.readMaster(src)
-          .find(_.name == "gpkg_ogr_contents")
-          .flatMap { m =>
-            var found: Option[Long] = None
-            GeoPackageIO.walk(src, m.rootPage, 0) { (_, payload) =>
-              val vals = GeoPackageIO.decodeRecord(payload)
-              if (vals.length >= 2 && String.valueOf(vals(0)).equalsIgnoreCase(table))
-                vals(1) match {
-                  case c: java.lang.Long if c >= 0L => found = Some(c)
-                  case _ => ()
-                }
-            }
-            found
-          }
-      } finally src.close()
-    } catch { case _: Exception => None }
-
-  override def build(): Scan = buildScan()
-}
-
-private[graft] class GpkgScan(fullSchema: StructType, required: StructType,
-    options: java.util.Map[String, String]) extends Scan with Batch {
-
-  // dialect hooks — SlScan (SpatiaLite) overrides these four; everything
-  // else (candidate chunking, subtree grouping, reader assembly) is
-  // shared so a planning fix lands once
-  protected def dialect: String = "gpkg"
-  protected def rtreeNodeName(t: String, g: String): String =
-    s"rtree_${t}_${g}_node"
-  protected def geomColOf(src: GeoPackageIO.PageSource,
-      master: Seq[GeoPackageIO.Master]): Option[String] =
-    GeoPackageIO.resolveCI(
-      GeoPackageIO.featureMetaFrom(src, master), table).map(_._2._1)
-  protected def mkScan(opts: java.util.Map[String, String]): Scan =
-    new GpkgScan(fullSchema, required, opts)
-
-  protected val path = GeoPackageDataSource.pathOf(options)
-  protected val table = GeoPackageDataSource.tableOf(options)
-  protected val bbox = GeoPackageDataSource.bboxOf(options)
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"$dialect $path#$table" + bbox.map(b => s" bbox=$b").getOrElse("")
-
-  // V2BboxPushdown hooks (see ShapefileDataSource). The geometry column
-  // name comes from the metadata dialect — one small memoized read.
-  private[graft] lazy val graftGeomCol: Option[String] =
-    GeoPackageDataSource.geomColForDialect(path, table, dialect)
-  private[graft] def graftBbox: Option[(Double, Double, Double, Double)] = bbox
-  private[graft] def graftWithBbox(b: String): Scan = {
-    val m = new java.util.HashMap[String, String](options)
-    m.put("bbox", b)
-    mkScan(m)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    val src = GeoPackageIO.openSource(spark.sessionState.newHadoopConf(), path)
-    try {
-      val master = GeoPackageIO.readMaster(src)
-      val m = GeoPackageIO.findMaster(master, table).getOrElse(
-        throw new IllegalArgumentException(
-          s"no table '$table' in $path (tables: ${master.map(_.name).mkString(", ")})"))
-      require(m.rootPage > 0, s"table '$table' is virtual — not readable")
-      val geomCol = geomColOf(src, master)
-      val candidates: Option[Array[Long]] = (bbox, geomCol) match {
+  def planChunks(o: SpatialFileOptions,
+      bbox: Option[(Double, Double, Double, Double)]): Seq[Chunk] =
+    withTable(o) { (src, master, m) =>
+      require(m.rootPage > 0, s"table '${table(o)}' is virtual — not readable")
+      val parallelism = SparkSession.active.sparkContext.defaultParallelism
+      val rtreeNode = (t: String, g: String) =>
+        if (spatialite) s"idx_${t}_${g}_node" else s"rtree_${t}_${g}_node"
+      val candidates: Option[Array[Long]] = (bbox, geomColOf(src, master, o, strict = true)) match {
         case (Some((qx0, qy0, qx1, qy1)), Some(g)) =>
-          GeoPackageIO.findMaster(master, rtreeNodeName(m.name, g))
-            .filter(_.rootPage > 0)
+          GeoPackageIO.findMaster(master, rtreeNode(m.name, g)).filter(_.rootPage > 0)
             .map(node => GeoPackageIO.rtreeCandidates(src, node.rootPage,
               qx0, qy0, qx1, qy1).sorted)
         case _ => None
       }
       candidates match {
-        case Some(ids) if ids.isEmpty => Array.empty
         case Some(ids) =>
-          val par = math.max(1, spark.sparkContext.defaultParallelism)
-          val chunkSize = math.max(256, ids.length / par)
-          ids.grouped(chunkSize)
-            .map(chunk => GpkgPartition(m.rootPage, chunk, null): InputPartition)
-            .toArray
+          ids.grouped(math.max(256, ids.length / math.max(1, parallelism)))
+            .map(SqliteChunk(m.rootPage, _, null)).toSeq
         case None =>
-          GeoPackageIO.groupedSubtreeRoots(src, m.rootPage, 0,
-              target = spark.sparkContext.defaultParallelism * 4)
-            .map(g => GpkgPartition(m.rootPage, null, g.toArray): InputPartition)
-            .toArray
+          GeoPackageIO.groupedSubtreeRoots(src, m.rootPage, 0, target = parallelism * 4)
+            .map(g => SqliteChunk(m.rootPage, null, g.toArray))
       }
-    } finally src.close()
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = SparkSession.active
-    val src = GeoPackageIO.openSource(spark.sessionState.newHadoopConf(), path)
-    val (colArr, geomIdx) = try {
-      val master = GeoPackageIO.readMaster(src)
-      val m = GeoPackageIO.findMaster(master, table).get
-      val geomCol = geomColOf(src, master)
-      val cols =
-        GeoPackageIO.forceGeomBinary(GeoPackageIO.parseColumns(m.sql), geomCol).toArray
-      (cols, geomCol.map(g => cols.indexWhere(_.name.equalsIgnoreCase(g))).getOrElse(-1))
-    } finally src.close()
-    // reorder by NAME into the FILE's column order (rows come back in
-    // DDL order; a user-supplied external schema may be shorter or
-    // reordered and must not misalign)
-    val fileNames = colArr.map(_.name)
-    required.fields.foreach { f =>
-      require(fileNames.contains(f.name),
-        s"$dialect: column '${f.name}' not in table '$table' " +
-          s"(have: ${fileNames.mkString(", ")})")
     }
-    val reorder = required.fields.map(f => fileNames.indexOf(f.name))
-    GpkgReaderFactory(
-      new GeoParquetIO.SerializableConf(spark.sessionState.newHadoopConf()),
-      path, table, colArr, geomIdx, bbox, reorder, required,
-      geomDialect = dialect)
+
+  // COUNT(*) answers from OGR's gpkg_ogr_contents feature-count table
+  // when the file carries one (this repo's writer emits it; OGR maintains
+  // it via triggers) — a few page reads, no feature b-tree walk.
+  // SpatiaLite keeps no maintained count.
+  override def metadataCount(o: SpatialFileOptions): Option[Long] =
+    if (spatialite) None
+    else try {
+      val src = GeoPackageIO.openSource(
+        SparkSession.active.sessionState.newHadoopConf(), o.path)
+      try {
+        GeoPackageIO.readMaster(src).find(_.name == "gpkg_ogr_contents").flatMap { m =>
+          var found: Option[Long] = None
+          GeoPackageIO.walk(src, m.rootPage, 0) { (_, payload) =>
+            val vals = GeoPackageIO.decodeRecord(payload)
+            if (vals.length >= 2 && String.valueOf(vals(0)).equalsIgnoreCase(table(o)))
+              vals(1) match {
+                case c: java.lang.Long if c >= 0L => found = Some(c)
+                case _ => ()
+              }
+          }
+          found
+        }
+      } finally src.close()
+    } catch { case _: Exception => None }
+
+  // SQLite records decode as a unit: `want` is not needed
+  def reader(o: SpatialFileOptions,
+      want: Array[Boolean]): (Configuration, Chunk) => Iterator[Row] = {
+    val (cols, geomIdx) = withTable(o) { (src, master, m) =>
+      val geomCol = geomColOf(src, master, o, strict = true)
+      val cols = GeoPackageIO.forceGeomBinary(GeoPackageIO.parseColumns(m.sql), geomCol).toArray
+      (cols, geomCol.map(g => cols.indexWhere(_.name.equalsIgnoreCase(g))).getOrElse(-1))
+    }
+    val (path, t, sl) = (o.path, table(o), spatialite)
+    (conf, ch) => {
+      val decode: Array[Byte] => Array[Byte] =
+        if (sl) SpatiaLiteIO.slToWkb else GeoPackageIO.gpbToWkb
+      // the chunk's rows materialize up-front: one sequential subtree walk
+      // or sorted lookup run per task, the same shape as the RDD path
+      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+      val src = GeoPackageIO.openSource(conf, path)
+      try {
+        if (ch.rowids == null) ch.subtreeRoots.foreach { root =>
+          GeoPackageIO.walk(src, root, 0) { (rowid, payload) =>
+            out += GeoPackageIO.materializeRow(cols, geomIdx, t, rowid, payload, decode)
+          }
+        }
+        else ch.rowids.foreach { rid =>
+          GeoPackageIO.btreeLookup(src, ch.tableRoot, rid).foreach { payload =>
+            out += GeoPackageIO.materializeRow(cols, geomIdx, t, rid, payload, decode)
+          }
+        }
+      } finally src.close()
+      out.iterator
+    }
   }
 }
 
-/** `rowids == null` → walk each subtree in `subtreeRoots` (consecutive
-  * same-level b-tree subtrees, grouped so task count stays bounded); else
-  * point-lookup each rowid under the table root (first field).
-  */
-private[io] final case class GpkgPartition(tableRoot: Long,
-    rowids: Array[Long], subtreeRoots: Array[Long]) extends InputPartition
+private[io] object SqliteFormat {
+  val GeoPackage: SqliteFormat = SqliteFormat("geopackage")
+  val SpatiaLite: SqliteFormat = SqliteFormat("spatialite")
 
-private[io] final case class GpkgReaderFactory(
-    sconf: GeoParquetIO.SerializableConf,
-    path: String,
-    table: String,
-    cols: Array[GeoPackageIO.Col],
-    geomIdx: Int,
-    bbox: Option[(Double, Double, Double, Double)],
-    reorder: Array[Int],
-    required: StructType,
-    geomDialect: String = "gpkg") extends PartitionReaderFactory {
-
-  // object-held decoders keep the factory serializable without closures
-  private def geomDecode: Array[Byte] => Array[Byte] =
-    if (geomDialect == "spatialite") SpatiaLiteIO.slToWkb
-    else GeoPackageIO.gpbToWkb
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GpkgPartition]
-    val src = GeoPackageIO.openSource(sconf.value, path)
-    val residual: org.apache.spark.sql.Row => Boolean = bbox match {
-      case Some((qx0, qy0, qx1, qy1)) if geomIdx >= 0 => { r =>
-        val wkb = r.get(geomIdx).asInstanceOf[Array[Byte]]
-        wkb != null && {
-          val e = graft.geom.Wkb.envelopeOf(wkb)
-          e.minX <= qx1 && e.maxX >= qx0 && e.minY <= qy1 && e.maxY >= qy0
-        }
-      }
-      case _ => _ => true
-    }
-    // materialize the partition's rows up-front (one sequential subtree
-    // walk / sorted lookup run per task — the same shape as the RDD path)
-    val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    try {
-      if (p.rowids == null) {
-        p.subtreeRoots.foreach { root =>
-          GeoPackageIO.walk(src, root, 0) { (rowid, payload) =>
-            val row = GeoPackageIO.materializeRow(cols, geomIdx, table, rowid, payload, geomDecode)
-            if (residual(row)) out += row
-          }
-        }
-      } else {
-        p.rowids.foreach { rid =>
-          GeoPackageIO.btreeLookup(src, p.tableRoot, rid).foreach { payload =>
-            val row = GeoPackageIO.materializeRow(cols, geomIdx, table, rid, payload, geomDecode)
-            if (residual(row)) out += row
-          }
-        }
-      }
-    } finally src.close()
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(required)
-    val it = out.iterator
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) {
-          val r = it.next()
-          val vals = reorder.map(i => r.get(i))
-          current = toCatalyst(org.apache.spark.sql.Row.fromSeq(
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(vals)))
-            .asInstanceOf[InternalRow]
-          true
-        } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-  }
+  private val geomColMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, Option[String]]()
 }

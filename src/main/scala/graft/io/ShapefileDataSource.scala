@@ -1,13 +1,8 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** DataSource V2 connector for ESRI shapefiles: the pure-JVM
   * .shp/.shx/.dbf reader behind `ShapefileIO.read` surfaced as a
@@ -37,164 +32,50 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Options: `bbox`, `geometryColumn` (default "geometry"), `chunkSize`
   * (records per partition, default 65536).
   */
-class ShapefileDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "shapefile"
-  override def supportsExternalMetadata(): Boolean = true
+class ShapefileDataSource extends SpatialFileProvider(ShapefileFormat)
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val path = FlatGeobufDataSource.pathOf(options)
-    ShapefileIO.schemaOf(SparkSession.active, path,
-      options.getOrDefault("geometryColumn", "geometry"))
-  }
+private[io] object ShapefileFormat extends SpatialFileFormat {
+  type Chunk = ShapefileIO.Chunk
+  val name = "shapefile"
+  override def chunked: Boolean = true
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new ShpTable(schema, properties)
-}
+  // the .dbf attributes in file order, then the geometry
+  def schema(o: SpatialFileOptions): StructType =
+    ShapefileIO.schemaOf(SparkSession.active, o.path, o.geometryColumn)
 
-private[graft] class ShpTable(tableSchema: StructType,
-    props: java.util.Map[String, String]) extends Table with SupportsRead {
-  private[graft] def graftGeomCol: Option[String] =
-    Some(Option(props.get("geometryColumn")).getOrElse("geometry"))
-  override def name(): String = "shapefile:" + FlatGeobufDataSource.pathOf(props)
-  override def schema(): StructType = tableSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = new java.util.HashMap[String, String](props)
-    merged.putAll(options)
-    new ShpScanBuilder(tableSchema, merged)
-  }
-}
+  def geometryColumn(o: SpatialFileOptions): Option[String] = Some(o.geometryColumn)
 
-private[graft] class ShpScanBuilder(fullSchema: StructType,
-    options: java.util.Map[String, String])
-  extends ScanBuilder with SupportsPushDownRequiredColumns
-  with MetadataCountPushdown {
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+  def planChunks(o: SpatialFileOptions,
+      bbox: Option[(Double, Double, Double, Double)]): Seq[Chunk] =
+    ShapefileIO.planChunks(SparkSession.active.sessionState.newHadoopConf(),
+      o.path, o.chunkSize, bbox)
 
-  override protected def countOptions: java.util.Map[String, String] = options
-  override protected def countSourceName: String = "shapefile"
-  override protected def buildDataScan(): Scan =
-    new ShpScan(fullSchema, required, options)
-
-  // COUNT(*) with no grouping and no bbox window answers from .shx FILE
-  // SIZES alone — (len - 100) / 8 records per file, zero data reads. Any
-  // malformed .shx (shorter than its header, or a ragged record area)
-  // declines the pushdown instead of corrupting the count.
-  override protected lazy val metadataCount: Option[Long] =
+  // COUNT(*) answers from .shx FILE SIZES alone — (len - 100) / 8 records
+  // per file, zero data reads. Any malformed .shx (shorter than its
+  // header, or a ragged record area) declines instead of corrupting the
+  // count.
+  override def metadataCount(o: SpatialFileOptions): Option[Long] =
     try {
       val conf = SparkSession.active.sessionState.newHadoopConf()
-      val files = ShapefileIO.shpFiles(conf,
-        FlatGeobufDataSource.pathOf(options))
-      if (files.isEmpty) None
-      else {
-        val lens = files.map { shp =>
-          val fs = shp.getFileSystem(conf)
-          fs.getFileStatus(ShapefileIO.sibling(shp, "shx")).getLen
-        }
-        if (lens.forall(l => l >= 100L && (l - 100L) % 8L == 0L))
-          Some(lens.map(l => (l - 100L) / 8L).sum)
-        else None
+      val lens = ShapefileIO.shpFiles(conf, o.path).map { shp =>
+        shp.getFileSystem(conf).getFileStatus(ShapefileIO.sibling(shp, "shx")).getLen
       }
+      if (lens.nonEmpty && lens.forall(l => l >= 100L && (l - 100L) % 8L == 0L))
+        Some(lens.map(l => (l - 100L) / 8L).sum)
+      else None
     } catch { case _: Exception => None }
 
-  override def build(): Scan = buildScan()
-}
-
-private[graft] class ShpScan(fullSchema: StructType, required: StructType,
-    options: java.util.Map[String, String]) extends Scan with Batch {
-
-  private val path = FlatGeobufDataSource.pathOf(options)
-  private val bbox = FlatGeobufDataSource.bboxOf(options)
-  private val geomCol = Option(options.get("geometryColumn")).getOrElse("geometry")
-  private val chunkSize = Option(options.get("chunkSize")).map(_.toInt).getOrElse(65536)
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"shapefile $path" + bbox.map(b => s" bbox=$b").getOrElse("")
-
-  // V2BboxPushdown hooks: let the optimizer narrow this scan when a plain
-  // spatial Filter sits above it (no `bbox` option needed from the user)
-  private[graft] def graftGeomCol: Option[String] = Some(geomCol)
-  private[graft] def graftBbox: Option[(Double, Double, Double, Double)] = bbox
-  private[graft] def graftWithBbox(b: String): Scan = {
-    val m = new java.util.HashMap[String, String](options)
-    m.put("bbox", b)
-    new ShpScan(fullSchema, required, m)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    ShapefileIO.planChunks(conf, path, chunkSize, bbox)
-      .map(ch => ShpPartition(ch.shp, ch.startRec, ch.nRecs): InputPartition)
-      .toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    // full-schema attribute columns in file (= schema) order, geometry last
-    val attrFields = fullSchema.fields.filter(_.name != geomCol)
-    val fieldTypes: Array[DataType] = attrFields.map(_.dataType)
-    val reqNames = required.fields.map(_.name).toSet
-    val wantAttr: Array[Boolean] = attrFields.map(f => reqNames.contains(f.name))
-    val wantGeom = reqNames.contains(geomCol)
-    // task rows: kept attrs in file order (++ geom if wanted) -> required order
-    val keptNames = attrFields.zip(wantAttr).collect { case (f, true) => f.name } ++
-      (if (wantGeom) Seq(geomCol) else Nil)
-    val reorder: Array[Int] = required.fields.map(f => keptNames.indexOf(f.name))
-    // bbox residual needs the geometry even when the projection pruned it
-    ShpReaderFactory(new GeoParquetIO.SerializableConf(conf), fieldTypes,
-      wantAttr, wantGeom || bbox.isDefined, wantGeom, bbox, reorder, required)
-  }
-}
-
-private[io] final case class ShpPartition(shp: String, startRec: Int, nRecs: Int)
-  extends InputPartition
-
-private[io] final case class ShpReaderFactory(
-    sconf: GeoParquetIO.SerializableConf,
-    fieldTypes: Array[DataType],
-    wantAttr: Array[Boolean],
-    decodeGeom: Boolean,
-    emitGeom: Boolean,
-    bbox: Option[(Double, Double, Double, Double)],
-    reorder: Array[Int],
-    required: StructType) extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ShpPartition]
-    val raw = ShapefileIO.readChunk(sconf.value,
-      ShapefileIO.Chunk(p.shp, p.startRec, p.nRecs), fieldTypes, wantAttr, decodeGeom)
-    val rows = bbox match {
-      case Some((qx0, qy0, qx1, qy1)) =>
-        raw.filter { r =>
-          val wkbv = r.get(r.length - 1).asInstanceOf[Array[Byte]]
-          wkbv != null && {
-            val e = graft.geom.Wkb.envelopeOf(wkbv)
-            !e.isEmpty && e.minX <= qx1 && e.maxX >= qx0 && e.minY <= qy1 && e.maxY >= qy0
-          }
-        }.map(r => if (emitGeom) r
-          else org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1)))
-      case None => raw
-    }
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(required)
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (rows.hasNext) {
-          val r = rows.next()
-          val vals = reorder.map(i => r.get(i))
-          current = toCatalyst(org.apache.spark.sql.Row.fromSeq(
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(vals)))
-            .asInstanceOf[InternalRow]
-          true
-        } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
+  def reader(o: SpatialFileOptions,
+      want: Array[Boolean]): (Configuration, Chunk) => Iterator[Row] = {
+    val attrTypes = schema(o).fields.init.map(_.dataType)
+    val (wantAttr, wantGeom) = (want.init, want.last)
+    // readChunk returns only the wanted columns: spread them to file width
+    val at = want.indices.filter(want).toArray
+    (conf, ch) => ShapefileIO.readChunk(conf, ch, attrTypes, wantAttr, wantGeom).map { r =>
+      val vals = new Array[Any](want.length)
+      var k = 0
+      while (k < at.length) { vals(at(k)) = r.get(k); k += 1 }
+      Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
     }
   }
 }

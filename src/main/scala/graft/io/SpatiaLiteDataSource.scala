@@ -1,18 +1,10 @@
 package graft.io
 
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-
-/** DataSource V2 connector for SpatiaLite feature tables — the fifth
-  * connector. [[SlScan]] EXTENDS the GeoPackage scan with SpatiaLite's
-  * dialect hooks (metadata lookup, `idx_<t>_<g>_node` R*-tree naming,
-  * blob decode) — the candidate chunking / subtree grouping / reader
-  * assembly live once in [[GpkgScan]], the same sharing shape as
-  * [[SpatiaLiteIO]] over the RDD path:
+/** DataSource V2 connector for SpatiaLite feature tables: the GeoPackage
+  * connector's SQLite format in the SpatiaLite dialect
+  * ([[SqliteFormat.SpatiaLite]]: `geometry_columns` metadata,
+  * `idx_<t>_<g>_node` R*-tree naming, SpatiaLite blob decode), the same
+  * sharing shape as [[SpatiaLiteIO]] over the RDD path:
   *
   * {{{
   *   spark.read.format("spatialite")
@@ -26,76 +18,4 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * loudly at planning time — surfacing raw un-decoded blobs would
   * corrupt downstream `st_*` consumers silently.
   */
-class SpatiaLiteDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "spatialite"
-  override def supportsExternalMetadata(): Boolean = true
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GeoPackageDataSource.schemaFor(
-      V2Options.pathOf(options, "spatialite"),
-      SpatiaLiteDataSource.tableOf(options), dialect = "spatialite")
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new SlTable(schema, properties)
-}
-
-object SpatiaLiteDataSource {
-  def tableOf(options: java.util.Map[String, String]): String = {
-    val t = options.get("table")
-    require(t != null && t.nonEmpty, "spatialite: the 'table' option is required")
-    t
-  }
-}
-
-private[graft] class SlTable(tableSchema: StructType,
-    props: java.util.Map[String, String]) extends Table with SupportsRead {
-  private[graft] def graftGeomCol: Option[String] =
-    GeoPackageDataSource.geomColForDialect(
-      V2Options.pathOf(props, "spatialite"),
-      SpatiaLiteDataSource.tableOf(props), "spatialite")
-  override def name(): String =
-    "spatialite:" + V2Options.pathOf(props, "spatialite") + "#" +
-      SpatiaLiteDataSource.tableOf(props)
-  override def schema(): StructType = tableSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = new java.util.HashMap[String, String](props)
-    merged.putAll(options)
-    new SlScanBuilder(tableSchema, merged)
-  }
-}
-
-private[graft] class SlScanBuilder(fullSchema: StructType,
-    options: java.util.Map[String, String])
-  extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = new SlScan(fullSchema, required, options)
-}
-
-private[graft] class SlScan(fullSchema: StructType, required: StructType,
-    options: java.util.Map[String, String])
-  extends GpkgScan(fullSchema, required, options) {
-
-  override protected def dialect: String = "spatialite"
-  override protected def rtreeNodeName(t: String, g: String): String =
-    s"idx_${t}_${g}_node"
-  override protected def geomColOf(src: GeoPackageIO.PageSource,
-      master: Seq[GeoPackageIO.Master]): Option[String] = {
-    // strict: a feature read of a table missing from geometry_columns
-    // must fail loudly, not surface raw un-decoded blobs; multi-geometry
-    // tables are refused by name for the same reason
-    SpatiaLiteIO.requireSingleGeom(
-      SpatiaLiteIO.geometryColumnRows(src, master), table, path)
-    val g = GeoPackageIO.resolveCI(
-      SpatiaLiteIO.geometryColumnsFrom(src, master), table)
-    require(g.isDefined,
-      s"spatialite: table '$table' not in geometry_columns of $path")
-    g.map(_._2._1)
-  }
-  override protected def mkScan(opts: java.util.Map[String, String]): Scan =
-    new SlScan(fullSchema, required, opts)
-}
+class SpatiaLiteDataSource extends SpatialFileProvider(SqliteFormat.SpatiaLite)

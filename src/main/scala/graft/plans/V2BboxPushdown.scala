@@ -1,18 +1,18 @@
 package graft.plans
 
 import graft.geom.Envelope
-import graft.io.{FgbScan, GdbScan, GpkgScan, ShpScan}
+import graft.io.{SpatialFileScan, SpatialFileTable}
 import graft.sql.GraftScalar
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.connector.read.Scan
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Catalyst optimizer rule: declarative spatial filter pushdown for the
-  * engine's file-format DataSource V2 connectors (shapefile, flatgeobuf,
-  * geopackage).
+  * engine's spatial file-source connector ([[SpatialFileTable]] and
+  * [[SpatialFileScan]]: shapefile, flatgeobuf, geopackage, spatialite,
+  * filegdb).
   *
   * A plain `.filter(st_intersects(geometry, <literal mask>))` (or any
   * bbox-derivable spatial conjunct — st_intersectsbox / within / contains
@@ -20,9 +20,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * now prunes at the source exactly like the explicit `bbox` option: the
   * rule folds the literal side's envelope at plan time and injects it into
   * the connector, which routes it through its native index (shapefile
-  * header envelopes, FlatGeobuf packed Hilbert R-tree, GeoPackage
-  * R*-tree). This is the DSv2 analog of the reference's DNF fragment
-  * pruning on parquet datasets (`dask_geopandas/io/arrow.py:90-96`) —
+  * header envelopes, FlatGeobuf packed Hilbert R-tree, GeoPackage and
+  * SpatiaLite R*-trees, FileGDB block envelopes). This is the DSv2 analog
+  * of the reference's DNF fragment pruning on parquet datasets (`dask_geopandas/io/arrow.py:90-96`) —
   * there the bbox prunes fragments via per-fragment metadata; here it
   * prunes files / feature runs / rowids via each format's own index.
   *
@@ -38,82 +38,38 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    scan option and V2ScanRelationPushDown builds the pruned scan.
   *  - `experimental.extraOptimizations` (post-pushdown): `Filter` over
   *    [[DataSourceV2ScanRelation]] — the built scan is rebuilt with the
-  *    bbox via the connector's `graftWithBbox` hook.
+  *    bbox via the scan's `withBbox` hook.
   * Both converge: the rewrite is skipped once the scan's bbox equals the
   * derived (intersected) envelope.
   */
 object V2BboxPushdown extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, rel: DataSourceV2Relation) =>
-      tableGeomCol(rel) match {
-        case Some(geomCol) =>
-          derive(cond, geomCol, rel.outputSet) match {
-            case Some(env) =>
-              val existing = parseBbox(rel.options.get("bbox"))
-              val merged = inter(existing, env)
-              if (existing.exists(sameEnv(_, merged))) f
-              else {
-                val m = new java.util.HashMap[String, String](
-                  rel.options.asCaseSensitiveMap())
-                m.put("bbox", fmt(merged))
-                Filter(cond, rel.copy(options = new CaseInsensitiveStringMap(m)))
-              }
-            case None => f
+    case f @ Filter(cond, rel: DataSourceV2Relation) => rel.table match {
+      case t: SpatialFileTable =>
+        t.geometryColumn.flatMap(derive(cond, _, rel.outputSet)).flatMap { env =>
+          val existing = parseBbox(rel.options.get("bbox"))
+          val merged = inter(existing, env)
+          if (existing.exists(sameEnv(_, merged))) None
+          else {
+            val m = new java.util.HashMap[String, String](rel.options.asCaseSensitiveMap())
+            m.put("bbox", fmt(merged))
+            Some(Filter(cond, rel.copy(options = new CaseInsensitiveStringMap(m))))
           }
-        case None => f
-      }
-
-    case f @ Filter(cond, sr: DataSourceV2ScanRelation) =>
-      scanGeomCol(sr.scan) match {
-        case Some(geomCol) =>
-          derive(cond, geomCol, sr.outputSet) match {
-            case Some(env) =>
-              val existing = scanBbox(sr.scan)
-              val merged = inter(existing, env)
-              if (existing.exists(sameEnv(_, merged))) f
-              else Filter(cond,
-                sr.copy(scan = scanWithBbox(sr.scan, fmt(merged))))
-            case None => f
-          }
-        case None => f
-      }
-  }
-
-  // ---- connector dispatch -------------------------------------------------
-
-  private def tableGeomCol(rel: DataSourceV2Relation): Option[String] =
-    rel.table match {
-      case t: graft.io.ShpTable  => t.graftGeomCol
-      case t: graft.io.FgbTable  => t.graftGeomCol
-      case t: graft.io.GpkgTable => t.graftGeomCol
-      case t: graft.io.GdbTable  => t.graftGeomCol
-      case t: graft.io.SlTable   => t.graftGeomCol
-      case _                     => None
+        }.getOrElse(f)
+      case _ => f
     }
 
-  private def scanGeomCol(scan: Scan): Option[String] = scan match {
-    case s: ShpScan  => s.graftGeomCol
-    case s: FgbScan  => s.graftGeomCol
-    case s: GpkgScan => s.graftGeomCol // also SlScan (subclass; dialect hooks virtual)
-    case s: GdbScan  => s.graftGeomCol
-    case _           => None
-  }
-
-  private def scanBbox(scan: Scan): Option[Envelope] = (scan match {
-    case s: ShpScan  => s.graftBbox
-    case s: FgbScan  => s.graftBbox
-    case s: GpkgScan => s.graftBbox
-    case s: GdbScan  => s.graftBbox
-    case _           => None
-  }).map { case (x0, y0, x1, y1) => Envelope(x0, y0, x1, y1) }
-
-  private def scanWithBbox(scan: Scan, b: String): Scan = scan match {
-    case s: ShpScan  => s.graftWithBbox(b)
-    case s: FgbScan  => s.graftWithBbox(b)
-    case s: GpkgScan => s.graftWithBbox(b)
-    case s: GdbScan  => s.graftWithBbox(b)
-    case other       => other
+    case f @ Filter(cond, sr: DataSourceV2ScanRelation) => sr.scan match {
+      case s: SpatialFileScan =>
+        s.geometryColumn.flatMap(derive(cond, _, sr.outputSet)).flatMap { env =>
+          val existing = s.bbox.map { case (x0, y0, x1, y1) => Envelope(x0, y0, x1, y1) }
+          val merged = inter(existing, env)
+          if (existing.exists(sameEnv(_, merged))) None
+          else Some(Filter(cond, sr.copy(scan = s.withBbox(fmt(merged)))))
+        }.getOrElse(f)
+      case _ => f
+    }
   }
 
   // ---- bbox plumbing ------------------------------------------------------

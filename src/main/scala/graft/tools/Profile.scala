@@ -25,7 +25,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    the jobs per query and the pass's Janino compiles (Spark's
   *    `CodegenMetrics`; non-zero in a warm pass means generated classes
   *    were evicted and recompiled).
-  *  - `time`: each query runs `iters` (default 3) times; every run's
+  *  - `time`: each query runs once untimed (JIT and codegen warm-up, as
+  *    in `graft.Bench`), then `iters` (default 3) times; every timed run's
   *    seconds go to stderr, and stdout gets one JSON line of the lower
   *    median per query: `{"sf":...,"iters":N,"queries":{"<name>":s,...}}`.
   *  - `plan`: each query's `SimpleMode` plan on stdout. With
@@ -104,10 +105,11 @@ object Profile {
   /** Runs `body` on each query in order and returns the names of those
     * that threw; the others still run.
     */
-  def pass[Q](qs: Seq[(String, Q)])(body: (String, Q) => Unit): Seq[String] =
+  def pass[Q](qs: Seq[(String, Q)], tag: String = "profile")(
+      body: (String, Q) => Unit): Seq[String] =
     qs.flatMap { case (name, q) =>
       try { body(name, q); None }
-      catch { case e: Throwable => System.err.println(s"[profile] $name failed: $e"); Some(name) }
+      catch { case e: Throwable => System.err.println(s"[$tag] $name failed: $e"); Some(name) }
     }
 
   final case class Job(id: Int, start: Long, query: String, desc: String, var end: Long = -1L,
@@ -187,6 +189,7 @@ object Profile {
       iters: Int): Seq[String] = {
     val medians = Seq.newBuilder[(String, Double)]
     val failed = pass(qs) { (name, q) =>
+      Bench.force(q(spark, sfDir)) // untimed warm-up, as graft.Bench runs
       val times = (1 to iters).map { i =>
         val t0 = System.nanoTime()
         Bench.force(q(spark, sfDir))

@@ -99,4 +99,12 @@ class FileGdbDataSourceSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("pts"))
   }
+
+  test("chunkSize must be positive: -1 fails instead of reading no rows") {
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("filegdb").option("chunkSize", "-1").load(path).collect()
+    }
+    assert(e.getMessage.contains("filegdb: chunkSize must be positive (got -1)"),
+      e.getMessage)
+  }
 }

@@ -131,4 +131,12 @@ class FlatGeobufDataSourceSpec extends AnyFunSuite {
       .collect()(0)
     assert(x.getLong(0) == 7L && x.getDouble(1) == 70.0)
   }
+
+  test("chunkSize must be positive: -1 fails instead of reading no rows") {
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("flatgeobuf").option("chunkSize", "-1").load(path).collect()
+    }
+    assert(e.getMessage.contains("flatgeobuf: chunkSize must be positive (got -1)"),
+      e.getMessage)
+  }
 }

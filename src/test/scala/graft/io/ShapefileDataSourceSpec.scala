@@ -108,4 +108,31 @@ class ShapefileDataSourceSpec extends AnyFunSuite {
     // x in {0,5,...,95}; x < 50 -> 10 of 20 columns of the grid
     assert(n == 200)
   }
+
+  test("a user schema maps onto the .dbf columns by name, not position") {
+    val dir = java.nio.file.Files.createTempDirectory("shpdsv2swap").toString
+    ShapefileIO.write((0 until 50).map(i => (s"a_$i", s"b_$i", Wkb.write(Point(i, i))))
+      .toDF("a", "b", "geometry").coalesce(1), dir)
+    val df = spark.read.schema("b string, a string, geometry binary")
+      .format("shapefile").load(dir)
+    val got = df.select($"a", $"b").as[(String, String)].collect().sorted.toSeq
+    assert(got == (0 until 50).map(i => (s"a_$i", s"b_$i")).sorted)
+    // the geometry is pruned and a column reads alone, still by name
+    assert(df.select($"b").as[String].collect().sorted.toSeq ==
+      (0 until 50).map(i => s"b_$i").sorted)
+    // a column the file lacks fails when the scan is planned, naming it
+    val e = intercept[Exception] {
+      spark.read.schema("a string, zz string, geometry binary")
+        .format("shapefile").load(dir).collect()
+    }
+    assert(e.getMessage.contains("column 'zz' not in"), e.getMessage)
+  }
+
+  test("chunkSize must be positive: -1 fails instead of reading no rows") {
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("shapefile").option("chunkSize", "-1").load(path).collect()
+    }
+    assert(e.getMessage.contains("shapefile: chunkSize must be positive (got -1)"),
+      e.getMessage)
+  }
 }

@@ -4,9 +4,9 @@ import graft.sql.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Fifth DSv2 connector: SpatiaLite over the shared gpkg scan machinery
-  * (GpkgPartition/GpkgReaderFactory with the spatialite blob dialect),
-  * against the committed sqlite3-written fixture.
+/** Fifth DSv2 connector: SpatiaLite as the SQLite format's spatialite
+  * dialect (SqliteFormat.SpatiaLite), against the committed
+  * sqlite3-written fixture.
   */
 class SpatiaLiteDataSourceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

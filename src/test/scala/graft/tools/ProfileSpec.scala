@@ -69,6 +69,14 @@ class ProfileSpec extends AnyFunSuite {
     assert(jobsFailed == Seq("built", "runs") && passes.size == 1)
   }
 
+  test("time builds and runs each query once untimed before its timed runs") {
+    var builds = 0
+    val qs: Seq[(String, Profile.Query)] =
+      Seq(("counted", (s, _) => { builds += 1; s.range(3).toDF("id") }))
+    val failed = Console.withOut(new ByteArrayOutputStream())(Profile.time(spark, dir, qs, 1))
+    assert(failed.isEmpty && builds == 2, builds)
+  }
+
   test("two warm jobs passes over a g15 and a t02 query agree on job and task counts") {
     val Right(qs) = Profile.resolve(Seq("g15", "t02"), queries)
     val (failed, passes) =

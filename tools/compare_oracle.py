@@ -3,10 +3,11 @@
 
 Usage: compare_oracle.py <sfDir> <verifyOutDir>
 
-For each <q>.parquet in verifyOutDir with an entry in oracle_sql.json:
-run the SQL in DuckDB over the sf tables, sort columns by name, sort rows,
-and compare row count, schema (column names), and a value hash (rounded
-reprs) — mirroring the driver's CORRECTNESS check.
+For each query in oracle_sql.json: run the SQL in DuckDB over the sf
+tables, sort columns by name, sort rows, and compare row count, schema
+(column names), and a value hash (rounded reprs) with the query's output
+<verifyOutDir>/<q>. A query with no output fails; the exit status is 1 when
+any query fails.
 """
 import sys, os, json, hashlib
 import duckdb
@@ -49,9 +50,14 @@ def canon(rows, cols):
     return hashlib.md5("\n".join(out).encode()).hexdigest()
 
 fails = 0
-for q in sorted(os.listdir(outdir)):
+# every query with an oracle must have an output: a query that threw in
+# graft.Verify has none, and that is a failure, not a skipped compare
+outputs = {q for q in os.listdir(outdir) if os.path.isdir(f"{outdir}/{q}")}
+for q in sorted(outputs | set(oracle)):
     d = f"{outdir}/{q}"
-    if not os.path.isdir(d):
+    if q not in outputs:
+        fails += 1
+        print(f"{q:24s} FAIL no output {d}")
         continue
     sq = con.execute(f"SELECT * FROM read_parquet('{d}/*.parquet')")
     scols = [c[0] for c in sq.description]
