@@ -26,6 +26,23 @@ object Bench {
       .config("spark.ui.enabled", "false")
   }
 
+  /** [[sessionBuilder]] plus `SPARK_GRAFT_EXTRA_CONF`: the session of
+    * `graft.Verify` and `graft.tools.Profile`, so a forced alternative (AQE
+    * off, no broadcast joins, ...) is one command for both. `graft.Bench`
+    * itself does not read the variable.
+    */
+  def toolSessionBuilder(): SparkSession.Builder =
+    extraConf(sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")).foldLeft(sessionBuilder()) {
+      case (builder, (k, v)) => builder.config(k, v)
+    }
+
+  /** `k=v,k2=v2` as its pairs, in order; an entry without `=` is skipped,
+    * and a value keeps any further `=`. */
+  def extraConf(kvs: String): Seq[(String, String)] =
+    kvs.split(',').toSeq.filter(_.contains('=')).map { kv =>
+      val Array(k, v) = kv.split("=", 2); k -> v
+    }
+
   /** Runs every output column of `df`: a noop-format write. */
   def force(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 

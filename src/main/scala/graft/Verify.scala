@@ -3,8 +3,9 @@ import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → `<outDir>/<q>`
   * parquet, plus oracle_sql.json with the oracle of every query it ran, for
   * the DuckDB compare (`tools/compare_oracle.py`). Runs in `graft.Bench`'s
-  * session; every query runs, then the dump exits 1 naming those that
-  * threw. */
+  * session plus `SPARK_GRAFT_EXTRA_CONF="k=v,..."` (`Bench.toolSessionBuilder`,
+  * as `graft.tools.Profile`); every query runs, then the dump exits 1 naming
+  * those that threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
@@ -24,7 +25,7 @@ object Verify {
         sys.exit(2)
       }
     }
-    val spark = Bench.sessionBuilder()
+    val spark = Bench.toolSessionBuilder()
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1666,10 +1666,7 @@ final case class GeoDataFrame(
       col("_cx").as("_jx"), col("_cy").as("_jy"))
     // lazy checkpoints (r19): each frame is still pinned (computed once,
     // lineage cut) but the MATERIALIZATION job is folded into its first
-    // consumer's action instead of being an eager job of its own — the
-    // connectedComponents edge count below is the first action that
-    // touches the whole chain, so the dbscan prologue costs one control
-    // job, not four
+    // consumer's action instead of being an eager job of its own
     val cross = lExpl.join(rHome, Seq("_jx", "_jy"))
       .filter(
         (col("_xa") - col("_xb")) * (col("_xa") - col("_xb")) +
@@ -1700,8 +1697,11 @@ final case class GeoDataFrame(
       .join(coreIds.withColumnRenamed("id", "id_b"), Seq("id_b"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
-    val labels = graft.ops.Dedup.connectedComponents(
-      starEdges.unionByName(crossCore), maxIter = maxIter)
+    // every id of the edges is a row of pts, so pts sizes the single-task
+    // gate: the edges' own leaves are the lazy checkpoints above, whose
+    // carried join estimates say nothing about the id count
+    val labels = graft.ops.Dedup.components(starEdges.unionByName(crossCore), "id_a", "id_b",
+      maxIter, graft.plans.ConnectedComponents.taskBudget(df.sparkSession.sparkContext), pts)._1
     // isolated cores (no core neighbor) label themselves
     val coreLab = cores.select(col("id"), col("_cx"), col("_cy"))
       .join(labels, col("id") === labels("doc_id"), "left")

@@ -1042,9 +1042,22 @@ object Dedup {
   /** Connected components over a near-duplicate pair graph: assigns every
     * node the MINIMUM id reachable from it — the canonical-document id of
     * its duplicate cluster (the step after LSH pair generation in a dedup
-    * pipeline: keep cluster_id == node, drop the rest).
+    * pipeline: keep cluster_id == node, drop the rest). Returns
+    * `(doc_id, cluster_id)`, one row per node a pair names, lazily: building
+    * it runs no job on the small-graph path. A pair with a NULL end is
+    * dropped before either path (a NULL id equals nothing), so such a node
+    * appears only through its other pairs.
     *
-    * Algorithm: min-label star contraction (the MapReduce CC family of
+    * Small graphs: one executor task. When the pair plan's leaves are known
+    * and their summed size is within
+    * [[graft.plans.ConnectedComponents.taskBudget]] (a fixed fraction of one
+    * task's share of executor memory), the pairs stream into a
+    * [[graft.plans.ConnectedComponents]] node: a union-find over primitive
+    * long arrays in one task, union by minimum root. A leaf of unknown size
+    * (an RDD built by hand, a generated range) or a sum above the budget
+    * takes the distributed loop.
+    *
+    * Large graphs: min-label star contraction (the MapReduce CC family of
     * Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC'14). Each round does (1) an edge hop — min over physical
     * neighbors' labels, (2) a basin reduce — every node reports its hop
@@ -1065,8 +1078,10 @@ object Dedup {
     * ToomCook multiplies by ~round 12. Convergence is witnessed by the
     * label sum (labels only ever decrease, so an unchanged sum means no
     * label moved); exhausting `maxIter` without convergence THROWS rather
-    * than returning wrong labels. The fixpoint (component minimum) is
-    * unique, so the result is deterministic regardless of schedule.
+    * than returning wrong labels.
+    *
+    * Both paths reach the same unique fixpoint (the component minimum), so
+    * the result does not depend on the path or the schedule.
     */
   def connectedComponents(
       pairs: DataFrame,
@@ -1077,68 +1092,55 @@ object Dedup {
 
   /** [[connectedComponents]] plus the number of hop+double rounds it ran —
     * the observable for the O(log diameter) contract (a path graph of
-    * diameter d must close in ~log2(d) rounds, not d).
+    * diameter d must close in ~log2(d) rounds, not d); 0 on the
+    * single-task path.
     */
   def connectedComponentsWithRounds(
       pairs: DataFrame,
       idACol: String = "id_a",
       idBCol: String = "id_b",
-      maxIter: Int = 30): (DataFrame, Int) = {
+      maxIter: Int = 30): (DataFrame, Int) =
+    components(pairs, idACol, idBCol, maxIter,
+      graft.plans.ConnectedComponents.taskBudget(pairs.sparkSession.sparkContext), pairs)
+
+  /** [[connectedComponentsWithRounds]] with the single-task gate's inputs
+    * given: the `budget` in leaf bytes, and `idSource`, the frame whose
+    * leaves it sizes. That is `pairs` itself, or a frame that every id of
+    * the pairs comes from (so its rows bound the union-find's nodes) when
+    * the pairs' own leaves are checkpoints whose carried join estimates
+    * say nothing about the id count.
+    */
+  private[graft] def components(
+      pairs: DataFrame,
+      idACol: String,
+      idBCol: String,
+      maxIter: Int,
+      budget: BigInt,
+      idSource: DataFrame): (DataFrame, Int) = {
+    val ids = pairs
+      .select(col(idACol).cast("long").as("src"), col(idBCol).cast("long").as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+    val plan = ids.queryExecution.analyzed
+    // plan statistics only: choosing the path runs no job
+    if (graft.plans.PlanSize.leafBytes(idSource.queryExecution.analyzed).exists(_ <= budget)) {
+      val spark = pairs.sparkSession
+      // the node has no physical plan without graft's planner strategy
+      graft.sql.functions.install(spark)
+      val node = graft.plans.ConnectedComponents(plan, plan.output(0), plan.output(1))
+      return (org.apache.spark.sql.GraftInterop.ofRows(spark, node), 0)
+    }
     // mirror each pair in ONE pass with an explode (r19): the old
     // checkpoint-then-union form cost two eager materialization jobs per
     // call; the explode reads the (possibly expensive) pair plan once by
-    // construction, and the count() below materializes the lazy checkpoint
-    val edges = pairs
-      .select(col(idACol).cast("long").as("src"), col(idBCol).cast("long").as("dst"))
+    // construction, and the first label checkpoint below materializes the
+    // lazy one
+    val edges = ids
       .select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("_e"))
       .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
       .distinct()
       .localCheckpoint(eager = false)
-    // Size-adaptive local solve: after dedup the label graph is usually
-    // orders of magnitude smaller than the corpus it came from (pairs are
-    // (long,long) only, and upstream generators are structurally bounded
-    // — minhash bucket caps, DBSCAN star contraction, blocking). When it
-    // fits trivially on the driver, a union-find finishes in milliseconds
-    // instead of ~log(diameter) Spark rounds of fixed overhead (~1 s each
-    // on a warm local cluster, worse with cluster scheduling). The count
-    // is free (edges is already materialized), the result is the same
-    // unique fixpoint (component minimum), and genuinely huge graphs
-    // (above spark.graft.cc.localMaxEdges directed rows, default 4M ~
-    // 128 MB driver heap transient) still take the distributed
-    // pointer-doubling loop below.
-    val localMax = pairs.sparkSession.conf
-      .get("spark.graft.cc.localMaxEdges", "4000000").toLong
-    val m = edges.count()
-    if (m <= localMax) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val arr = edges.as[(Long, Long)].collect()
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      var i = 0
-      while (i < arr.length) {
-        val (a, b) = arr(i)
-        if (!parent.contains(a)) parent(a) = a
-        if (!parent.contains(b)) parent(b) = b
-        val ra = find(a); val rb = find(b)
-        // union by MIN root: roots only ever decrease, so each tree's root
-        // stays its component minimum — the same fixpoint the distributed
-        // loop converges to
-        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-        i += 1
-      }
-      val out = parent.keysIterator
-        .map(k => (k, find(k))).toSeq.toDF("doc_id", "cluster_id")
-      return (out, 0)
-    }
     // seed labels with the first hop already applied: label = min(self, neighbors)
     // capped-stats checkpoints: the loop below would otherwise compound
     // size-only join estimates doubly-exponentially across rounds (Spark 4
@@ -1149,7 +1151,11 @@ object Dedup {
       edges.groupBy(col("src"))
         .agg(min(col("dst")).as("_mn"))
         .select(col("src").as("node"), least(col("src"), col("_mn")).as("label")))
-    var prevSum = labels.agg(sum(col("label"))).head().getLong(0)
+    // the exact label sum: a decimal cannot overflow on extreme ids as a
+    // long sum does under ANSI arithmetic; null for an empty graph
+    def labelSum(ls: DataFrame): java.math.BigDecimal =
+      ls.agg(sum(col("label").cast("decimal(20,0)"))).head().getDecimal(0)
+    var prevSum = labelSum(labels)
     // one pointer jump: label := min(label, label-of-label). The label map
     // is a functional graph pointing at strictly smaller ids, i.e. a forest
     // rooted at local minima — jumping walks toward the root.
@@ -1185,12 +1191,12 @@ object Dedup {
       // chain-depth) cheap label-only joins)
       var cur = org.apache.spark.sql.GraftInterop.localCheckpointCappedStats(
         merged)
-      var curSum = cur.agg(sum(col("label"))).head().getLong(0)
+      var curSum = labelSum(cur)
       var collapsed = false
       while (!collapsed) {
         val j = org.apache.spark.sql.GraftInterop.localCheckpointCappedStats(
           jump(cur))
-        val js = j.agg(sum(col("label"))).head().getLong(0)
+        val js = labelSum(j)
         collapsed = js == curSum
         curSum = js
         cur = j

@@ -24,5 +24,5 @@ object GraftExtensions {
   val rules: Seq[Rule[LogicalPlan]] = Seq(SpatialFilterPushdown, V2BboxPushdown, SpatialJoinRewrite)
 
   /** Planner strategies, tried before Spark's own. */
-  val strategies: Seq[SparkStrategy] = Seq(IndexedSpatialJoinStrategy, SmallSort)
+  val strategies: Seq[SparkStrategy] = Seq(IndexedSpatialJoinStrategy, SmallSort, ConnectedComponentsStrategy)
 }

@@ -1,11 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalRelation,
-  LogicalPlan, LogicalQueryStage, Project, Sort, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LogicalPlan, Project,
+  Sort, Window}
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-import org.apache.spark.sql.execution.{LogicalRDD, SortExec, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.{SortExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 import org.apache.spark.sql.internal.SQLConf
 
@@ -33,15 +32,15 @@ import org.apache.spark.sql.internal.SQLConf
   * and the gate keeps that task no larger than one of the tasks AQE would
   * split an advisory partition into (PROFILE.md, "Small global sorts",
   * has the case of a gate at the advisory size itself). The leaves counted
-  * are file scans, local relations, checkpoints and `LogicalQueryStage`s;
-  * any other leaf keeps today's plan. When AQE re-plans after a stage below
-  * the sort has run, that stage is a `LogicalQueryStage` leaf carrying its
-  * runtime size, so a static estimate above the gate can still gather in
-  * the final plan, and one below it can return to a range exchange. With
+  * are those of [[PlanSize.leafBytes]]; any other leaf keeps today's plan.
+  * When AQE re-plans after a stage below the sort has run, that stage is a
+  * `LogicalQueryStage` leaf carrying its runtime size, so a static estimate
+  * above the gate can still gather in the final plan, and one below it can
+  * return to a range exchange. With
   * AQE off (streaming micro-batches included), above the gate, and over a
-  * child that is already one partition (a limit, an unpartitioned window),
-  * planning is Spark's own. Results are unchanged: the same sort runs over
-  * the same rows.
+  * child that is already one partition (a limit, an unpartitioned window,
+  * [[ConnectedComponents]]), planning is Spark's own. Results are
+  * unchanged: the same sort runs over the same rows.
   */
 object SmallSort extends SparkStrategy {
 
@@ -55,7 +54,7 @@ object SmallSort extends SparkStrategy {
   private def gathers(child: LogicalPlan): Boolean = {
     val conf = SQLConf.get
     conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled &&
-      !onePartition(child) && leafBytes(child).exists(_ <= taskBytes(conf))
+      !onePartition(child) && PlanSize.leafBytes(child).exists(_ <= taskBytes(conf))
   }
 
   /** The task size AQE's coalescing picks for one advisory partition of
@@ -69,19 +68,11 @@ object SmallSort extends SparkStrategy {
     BigInt(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)) / minPartitions
   }
 
-  /** Summed size of the plan's leaves; `None` when one is of another kind. */
-  private def leafBytes(plan: LogicalPlan): Option[BigInt] =
-    plan.collectLeaves().foldLeft(Option(BigInt(0))) {
-      case (Some(sum), leaf @ (_: LogicalRelation | _: LocalRelation | _: LogicalRDD |
-          _: LogicalQueryStage)) =>
-        Some(sum + leaf.stats.sizeInBytes)
-      case _ => None
-    }
-
   /** Children Spark plans with one output partition: no exchange goes under their sort. */
   private def onePartition(plan: LogicalPlan): Boolean = plan match {
     case _: GlobalLimit => true
     case w: Window => w.partitionSpec.isEmpty
+    case _: ConnectedComponents => true
     case Project(_, child) => onePartition(child)
     case Filter(_, child) => onePartition(child)
     case _ => false

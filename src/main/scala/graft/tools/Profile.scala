@@ -39,8 +39,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * A query is a full name or a prefix of one name (an id such as `t05`).
   * Every run is a noop write, as in `graft.Bench`, in `graft.Bench`'s
   * session (`SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`) plus
-  * `SPARK_GRAFT_EXTRA_CONF="k=v,k2=v2"`. Every mode runs all its queries,
-  * then exits 1 naming those that threw.
+  * `SPARK_GRAFT_EXTRA_CONF="k=v,k2=v2"` (`Bench.toolSessionBuilder`, as
+  * in `graft.Verify`). Every mode runs all its queries, then exits 1 naming
+  * those that threw.
   */
 object Profile {
   type Query = (SparkSession, String) => DataFrame
@@ -59,13 +60,7 @@ object Profile {
       case Left(errors) => errors.foreach(System.err.println); sys.exit(2)
     }
     val iters = args.lift(2).map(_.toInt)
-    val builder = Bench.sessionBuilder()
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { kvs =>
-      kvs.split(',').filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      }
-    }
-    val spark = builder.getOrCreate()
+    val spark = Bench.toolSessionBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.sql.functions.install(spark)
     val sfDir = Bench.sfDir

@@ -572,19 +572,13 @@ class PipelineOpsSpec extends AnyFunSuite {
     // needs d rounds, pointer doubling must do it in ~log2(d)
     val n = 10007 // prime -> i * 48271 % n is a bijection
     val perm = (i: Int) => (i.toLong * 48271L) % n
-    val edges = (0 until n - 1).map(i => (perm(i), perm(i + 1)))
+    val path = (0 until n - 1).map(i => (perm(i), perm(i + 1)))
       .toDF("id_a", "id_b").repartition(4)
     // force the DISTRIBUTED loop: this test pins the pointer-doubling
-    // contract, so the small-graph local union-find must not short-circuit
-    val k = "spark.graft.cc.localMaxEdges"
-    val before = spark.conf.getOption(k)
-    spark.conf.set(k, "0")
-    val (cc, rounds) =
-      try Dedup.connectedComponentsWithRounds(edges)
-      finally before match {
-        case Some(v) => spark.conf.set(k, v)
-        case None    => spark.conf.unset(k)
-      }
+    // contract, so the single-task union-find must not short-circuit. An
+    // RDD-backed input has no known size, so the gate declines it.
+    val edges = spark.createDataFrame(path.rdd, path.schema)
+    val (cc, rounds) = Dedup.connectedComponentsWithRounds(edges)
     val labels = cc.select($"cluster_id").distinct().as[Long].collect()
     assert(labels.toSeq == Seq(0L), s"one component labeled by its min, got ${labels.toSeq}")
     assert(cc.count() == n)
@@ -598,22 +592,18 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("connectedComponents: local union-find short-circuit matches the distributed loop") {
-    // small graphs (default below spark.graft.cc.localMaxEdges) solve on
-    // the driver; both routes must land on the identical unique fixpoint
-    // (component minimum), including duplicate/reversed input pairs and
-    // self-loops
+    // small graphs (leaves within the task budget) solve in one task; both
+    // routes must land on the identical unique fixpoint (component
+    // minimum), including duplicate/reversed input pairs and self-loops
     val rnd = new scala.util.Random(7)
     val pairs = (0 until 400).map { _ =>
       val a = rnd.nextInt(120).toLong; val b = rnd.nextInt(120).toLong; (a, b)
     } :+ ((200L, 200L))
     val df = pairs.toDF("id_a", "id_b")
     val (local, rLocal) = Dedup.connectedComponentsWithRounds(df)
-    assert(rLocal == 0, "small graph must take the driver union-find")
-    val k = "spark.graft.cc.localMaxEdges"
-    spark.conf.set(k, "0")
-    val dist =
-      try Dedup.connectedComponents(df)
-      finally spark.conf.unset(k)
+    assert(rLocal == 0, "small graph must take the single-task union-find")
+    // an RDD-backed input has no known size: the distributed loop
+    val dist = Dedup.connectedComponents(spark.createDataFrame(df.rdd, df.schema))
     val l = local.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val d = dist.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(l == d)

@@ -44,6 +44,12 @@ class ProfileSpec extends AnyFunSuite {
     assert(errors(2).startsWith("ambiguous query: g1 matches "), errors(2))
   }
 
+  test("SPARK_GRAFT_EXTRA_CONF parses to its pairs in order, skipping entries without =") {
+    assert(graft.Bench.extraConf("") == Nil)
+    assert(graft.Bench.extraConf("spark.sql.adaptive.enabled=false,junk,,k=a=b") ==
+      Seq("spark.sql.adaptive.enabled" -> "false", "k" -> "a=b"))
+  }
+
   test("a query that throws is returned as failed and the others still run") {
     val ran = ArrayBuffer.empty[String]
     val failed = Profile.pass(Seq("a" -> 1, "b" -> 2, "c" -> 3)) { (name, q) =>
