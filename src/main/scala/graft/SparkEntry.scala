@@ -1388,14 +1388,14 @@ object SparkEntry {
 
     // nearest with how=left: customers with no supplier within a TIGHT
     // radius come back null-padded (the geopandas sjoin_nearest outer
-    // contract); deterministic key anti-join, no row-id stamping
+    // contract); one left join on the unique key, no row-id stamping
     "g68_sjoin_nearest_left" -> ((s, d) => {
       val cust = GeoDataFrame(customerPts(s, d))
       val supp = GeoDataFrame(t(s, d, "supplier")
         .withColumn("sx", col("s_acctbal"))
         .withColumn("sy", (col("s_suppkey") % 1000).cast("double"))
         .withColumn("geometry", st_point(col("sx"), col("sy"))))
-      cust.sjoinNearest(supp, leftKey = "c_custkey",
+      cust.sjoinKnn(supp, leftKey = "c_custkey", k = 1,
           maxDistance = 40.0, cellSize = 80.0, how = "left")
         .select(col("c_custkey"), col("s_suppkey"),
           round(col("dist"), 4).as("dist"))
@@ -1564,7 +1564,7 @@ object SparkEntry {
         .withColumn("sx", col("s_acctbal"))
         .withColumn("sy", (col("s_suppkey") % 1000).cast("double"))
         .withColumn("geometry", st_point(col("sx"), col("sy"))))
-      cust.sjoinNearest(supp, leftKey = "c_custkey",
+      cust.sjoinKnn(supp, leftKey = "c_custkey", k = 1,
           maxDistance = 300.0, cellSize = 500.0)
         .select(col("c_custkey"), col("s_suppkey"),
           round(col("dist"), 4).as("dist"))

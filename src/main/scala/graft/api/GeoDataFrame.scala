@@ -558,7 +558,7 @@ final case class GeoDataFrame(
 
   /** Estimate the UTM zone CRS of the data (geopandas `estimate_utm_crs`,
     * a geopandas-proper surface the reference lacks — same family as
-    * [[sjoinNearest]]): the UTM zone containing the center of
+    * [[sjoinKnn]]): the UTM zone containing the center of
     * `total_bounds`, EPSG:326xx north / EPSG:327xx south. A projected
     * frame's center routes back to lon/lat through the engine's own
     * st_transform dispatch (EPSG table, UTM codes, proj records all work).
@@ -791,9 +791,8 @@ final case class GeoDataFrame(
     // left/right outer (geopandas sjoin how=, one notch past the
     // inner-only reference, sjoin.py:53-54). The broadcast join does
     // how="left" natively; otherwise the preserved side carries a row id
-    // through the inner plan, and unmatched rows come back via a
-    // left-anti on the matched-id set (id-only exchange, no new shuffle
-    // class) and union in with the other side's columns null.
+    // through the inner plan and is left-joined to the inner result's
+    // other columns on it (`preserving`), so the inner join runs once.
     require(Set("inner", "left", "right").contains(how),
       s"unknown sjoin how '$how' (inner | left | right)")
     val useBroadcast = strategy == "broadcast" || strategy == "auto" && {
@@ -807,12 +806,12 @@ final case class GeoDataFrame(
 
     val rowId = "_sjoin_row_id"
     // The id-stamped side feeds TWO plan branches (the inner join and the
-    // left-anti unmatched probe below), and monotonically_increasing_id is
-    // nondeterministic across recomputation: a task retry or executor loss
-    // could assign DIFFERENT ids to the same row in each branch, silently
-    // dropping or duplicating unmatched rows. localCheckpoint() pins the
-    // stamped rows once so both branches read identical ids — same pinning
-    // pattern as Dedup.simhashPairs.
+    // preserved side of the left join below), and
+    // monotonically_increasing_id is nondeterministic across recomputation:
+    // a task retry or executor loss could assign DIFFERENT ids to the same
+    // row in each branch, silently dropping or duplicating rows.
+    // localCheckpoint() pins the stamped rows once so both branches read
+    // identical ids — same pinning pattern as Dedup.simhashPairs.
     def preserved(side: DataFrame, preserve: Boolean): DataFrame =
       if (preserve) side.withColumn(rowId, monotonically_increasing_id()).localCheckpoint()
       else side
@@ -977,8 +976,8 @@ final case class GeoDataFrame(
         }
       }
     how match {
-      case "left" if !nativeOuter => withUnmatched(inner, leftDf, rowId)
-      case "right"                => withUnmatched(inner, rightRenamed, rowId)
+      case "left" if !nativeOuter => preserving(leftDf, inner, rowId).drop(rowId)
+      case "right"                => preserving(rightRenamed, inner, rowId).drop(rowId)
       case _                      => inner
     }
   }
@@ -993,19 +992,17 @@ final case class GeoDataFrame(
       cell => expr(emit(column(cell))), keep.map(k => cell => expr(k(column(cell))))))
   }
 
-  /** sjoin how="left"/"right": rows of the `side` stamped with `rowId`
-    * that found no pair come back once, the other side's columns null.
+  /** The preserved-side rule of every outer join here (geopandas
+    * how="left"/"right"): each row of `side` comes back with its rows of
+    * `inner`, or once with `inner`'s other columns null. `side` is left-
+    * joined to those columns on `key`, which must be unique and non-null
+    * on `side`, so `inner` is computed once. Columns come out in `inner`'s
+    * order.
     */
-  private def withUnmatched(inner: DataFrame, side: DataFrame, rowId: String): DataFrame = {
-    val matched = inner.select(col(rowId)).distinct()
-    unionNullPadded(inner, side.join(matched, Seq(rowId), "left_anti")).drop(rowId)
-  }
-
-  /** `inner` plus `unmatched`, with nulls in the columns `unmatched` lacks. */
-  private def unionNullPadded(inner: DataFrame, unmatched: DataFrame): DataFrame = {
-    val padded = inner.schema.fields.filterNot(f => unmatched.columns.contains(f.name))
-      .foldLeft(unmatched)((acc, f) => acc.withColumn(f.name, lit(null).cast(f.dataType)))
-    inner.unionByName(padded.select(inner.columns.map(col).toIndexedSeq: _*))
+  private def preserving(side: DataFrame, inner: DataFrame, key: String): DataFrame = {
+    val other = inner.columns.filterNot(side.columns.contains)
+    side.join(inner.select((key +: other).map(col).toIndexedSeq: _*), Seq(key), "left")
+      .select(inner.columns.map(col).toIndexedSeq: _*)
   }
 
   /** Geodesic proximity join: pairs of POINT rows within `meters` great-
@@ -1087,12 +1084,14 @@ final case class GeoDataFrame(
   /** Geodesic nearest-neighbor join: for each left POINT row, the k
     * nearest right points by GREAT-CIRCLE meters among candidates within
     * `maxMeters` (rank <= k keeps distance ties, geopandas-style). The
-    * lon/lat twin of [[sjoinNearest]]: candidates come from the
-    * latitude-aware [[sjoinDwithinSphere]] grid join (one shuffle, never
-    * all-pairs; a candidate set complete within `maxMeters` makes the
-    * per-key rank exact), distances are `st_distancesphere`. `how="left"`
-    * keeps radius-misses with null right columns; `leftKey` must uniquely
-    * identify left rows (same contract as sjoinNearest).
+    * lon/lat twin of [[sjoinKnn]] with a finite `maxDistance`: candidates
+    * come from the latitude-aware [[sjoinDwithinSphere]] grid join (one
+    * shuffle, never all-pairs; a candidate set complete within
+    * `maxMeters` makes the per-key rank exact), distances are
+    * `st_distancesphere`. `how="left"` keeps radius-misses with null right
+    * columns and null distance; `leftKey` must be unique and non-null on
+    * the left (the [[sjoinKnn]] contract), and `distanceCol` replaces a
+    * left column of the same name.
     */
   def sjoinNearestSphere(
       right: GeoDataFrame,
@@ -1105,91 +1104,62 @@ final case class GeoDataFrame(
     require(maxMeters > 0 && k >= 1, "sjoinNearestSphere: bad params")
     require(Set("inner", "left").contains(how),
       s"unknown sjoinNearestSphere how '$how' (inner | left)")
-    val rGeomName = suffixedName(right.geometryColumn, rsuffix)
-    val cands = sjoinDwithinSphere(right, maxMeters, rsuffix = rsuffix).df
-      .withColumn(distanceCol,
-        st_distanceSphere(col(geometryColumn), col(rGeomName)))
-    val nearest = rankNearest(cands, leftKey, rGeomName, distanceCol, k, exclusive = false)
-    if (how == "left") withUnmatchedLeft(nearest, leftKey) else nearest
+    val left = without(distanceCol)
+    left.rankNearest(left.sjoinDwithinSphere(right, maxMeters, rsuffix = rsuffix).df,
+      leftKey, left.suffixedName(right.geometryColumn, rsuffix), st_distanceSphere,
+      distanceCol, k, exclusive = false, how)
   }
 
-  /** Nearest-neighbor spatial join within a radius (geopandas
-    * `sjoin_nearest(max_distance=...)`; the surveyed dask-geopandas version
-    * has no distributed counterpart — this extends the reference surface
-    * with the operator its users fall back to geopandas for).
+  /** k-nearest-neighbour join with both sides distributed (geopandas
+    * `sjoin_nearest`, with or without `max_distance`; the dask-geopandas
+    * version surveyed has no distributed counterpart). Each left row keeps
+    * its k nearest right rows under the `rank() <= k` tie contract of
+    * [[sjoinKnnBroadcast]]: every right row tied at the k-th distance is
+    * kept. `maxDistance` is inclusive; rows with no right row within it
+    * drop out under `how="inner"` and come back once under `how="left"`,
+    * with null right columns and null distance, matching geopandas.
+    * `exclusive = true` skips right geometries equal to the left one
+    * (shapely `query_nearest(exclusive)`, the self-join idiom).
     *
-    * `maxDistance` is required: the radius bounds the candidate volume of
-    * the one grid join, and geopandas' own docs recommend `max_distance`
-    * for performance ([[sjoinKnn]] is the unbounded join). Rows with no
-    * right neighbor within the radius drop out under `how="inner"` and
-    * come back null-padded (null right columns, null distance) under
-    * `how="left"`, matching geopandas. Ties — several right rows at
-    * exactly the minimum distance — are all kept, matching geopandas;
-    * `exclusive=true` drops right geometries equal to the left geometry
-    * (the self-join idiom, shapely `query_nearest(exclusive)`). `k > 1`
-    * keeps the k nearest with the same `rank() <= k` tie contract.
+    * The radius picks where the candidates come from; both sources finish
+    * in the same `rank()` window on `leftKey` (WindowGroupLimit keeps only
+    * rank <= k candidates below its exchange):
     *
-    * Plan (100 TB shape): dwithin grid join on padded fixed-size cells
-    * (anchor-cell exactly-once emission, zero eager scans) -> RANK window
-    * partitioned by the left key keeps per-left minima. One grid equi-join
-    * + one hash exchange; WindowGroupLimit prefilters rank<=k candidates
-    * below the exchange, so the shuffle carries near-minimal rows. Never
-    * all-pairs.
+    *  - Finite `maxDistance`: the grid `dwithin` [[sjoin]] at `cellSize`
+    *    (padded fixed-origin cells, anchor-cell exactly-once emission).
+    *    Nothing runs while the query is built, and the radius bounds the
+    *    candidate volume (geopandas' docs recommend `max_distance` for
+    *    speed).
+    *  - Infinite `maxDistance` (the default), in the manner of REPOSE and
+    *    Odyssey — prune globally with per-cell bounds, then answer
+    *    locally — so the job count does not depend on how the data is
+    *    spread:
+    *     1. Driver: one aggregate buckets the right side into the
+    *        fixed-origin `cellSize` grid, each row in the cell holding its
+    *        envelope centre, and collects per non-empty cell the row count
+    *        and the union of the rows' envelopes. Nothing else reaches the
+    *        driver. Above [[GeoDataFrame.KnnMaxCells]] cells the summary is
+    *        re-aggregated at 4× the cell size, so driver memory stays
+    *        bounded.
+    *     2. Executors: the summary ships as a broadcast STR-tree and
+    *        [[graft.sql.KnnCellProbe]] sends each left row to every cell
+    *        that can hold one of its k nearest right rows. An equi-join on
+    *        the home cell brings those rows; with fewer than k right rows
+    *        every left row gets all of them.
     *
-    * `leftKey` MUST uniquely identify left rows (it is the index analog of
-    * geopandas' per-row semantics): duplicate key values would pool the
-    * candidate sets of distinct rows into one rank window and keep only
-    * the pooled minimum. Not `require`d — verifying uniqueness would cost
-    * a count-distinct pass over the left side; add a surrogate key
-    * (`monotonically_increasing_id`) when no natural unique key exists.
-    */
-  def sjoinNearest(
-      right: GeoDataFrame,
-      leftKey: String,
-      maxDistance: Double,
-      cellSize: Double,
-      rsuffix: String = "_right",
-      distanceCol: String = "dist",
-      how: String = "inner",
-      exclusive: Boolean = false,
-      k: Int = 1): DataFrame = {
-    require(maxDistance > 0, "sjoinNearest requires a positive maxDistance")
-    require(k >= 1, "sjoinNearest requires k >= 1")
-    require(Set("inner", "left").contains(how),
-      s"unknown sjoinNearest how '$how' (inner | left)")
-    val rGeomName = suffixedName(right.geometryColumn, rsuffix)
-    val cands = sjoin(right, predicate = "dwithin", strategy = "grid",
-      cellSize = Some(cellSize), rsuffix = rsuffix, distance = maxDistance)
-      .withColumn(distanceCol, st_distance(col(geometryColumn), col(rGeomName)))
-    val nearest = rankNearest(cands, leftKey, rGeomName, distanceCol, k, exclusive)
-    if (how == "left") withUnmatchedLeft(nearest, leftKey) else nearest
-  }
-
-  /** Unbounded k-nearest-neighbour join with both sides distributed
-    * (geopandas `sjoin_nearest` without `max_distance` at k = 1; the
-    * `rank() <= k` tie contract of [[sjoinKnnBroadcast]] for any k). Two
-    * phases in the manner of REPOSE and Odyssey — prune globally with
-    * per-cell bounds, then answer locally — so the job count does not
-    * depend on how the data is spread:
+    * `cellSize` shapes only the plan: the result is the same at any cell
+    * size. Rows with a null or empty geometry find no neighbour, as in the
+    * broadcast kNN join. `distanceCol` replaces a left column of the same
+    * name.
     *
-    *  1. Driver: one aggregate buckets the right side into the
-    *     fixed-origin `cellSize` grid, each row in the cell holding its
-    *     envelope centre, and collects per non-empty cell the row count
-    *     and the union of the rows' envelopes. Nothing else reaches the
-    *     driver. Above [[GeoDataFrame.KnnMaxCells]] cells the summary is
-    *     re-aggregated at 4× the cell size, so driver memory stays bounded.
-    *  2. Executors: the summary ships as a broadcast STR-tree and
-    *     [[graft.sql.KnnCellProbe]] sends each left row to every cell that
-    *     can hold one of its k nearest right rows. An equi-join on the home
-    *     cell brings those rows, and a `rank()` window on `leftKey` keeps
-    *     rank <= k — exact, ties included, in one pass.
-    *
-    * Rows with a null or empty geometry drop out on both sides, as in the
-    * broadcast kNN join; with fewer than k right rows every left row gets
-    * all of them. `exclusive = true` skips right geometries equal to the
-    * left one. `leftKey` must uniquely identify left rows (the
-    * [[sjoinNearest]] contract). `cellSize` shapes the plan only: the
-    * result is the same at any cell size.
+    * `leftKey` MUST be unique and non-null on the left (it is the index
+    * analog of geopandas' per-row semantics): duplicate key values would
+    * pool the candidate sets of distinct rows into one rank window and
+    * keep only the pooled minimum, and a null key matches nothing, so under
+    * `how="left"` its row comes back once, null-padded. Not `require`d —
+    * verifying uniqueness would cost a count-distinct pass over the left
+    * side; add a surrogate key (`monotonically_increasing_id`) when no
+    * natural unique key exists.
     */
   def sjoinKnn(
       right: GeoDataFrame,
@@ -1198,12 +1168,32 @@ final case class GeoDataFrame(
       cellSize: Double,
       rsuffix: String = "_right",
       distanceCol: String = "dist",
-      exclusive: Boolean = false): DataFrame = {
+      exclusive: Boolean = false,
+      maxDistance: Double = Double.PositiveInfinity,
+      how: String = "inner"): DataFrame = {
     require(k >= 1, "sjoinKnn requires k >= 1")
     require(cellSize > 0, "sjoinKnn requires a positive cellSize")
+    require(maxDistance > 0, "sjoinKnn requires a positive maxDistance")
+    require(Set("inner", "left").contains(how),
+      s"unknown sjoinKnn how '$how' (inner | left)")
+    val left = without(distanceCol)
+    val cands =
+      if (maxDistance.isPosInfinity) left.knnCandidates(right, k, cellSize, rsuffix, exclusive)
+      else left.sjoin(right, predicate = "dwithin", strategy = "grid",
+        cellSize = Some(cellSize), rsuffix = rsuffix, distance = maxDistance)
+    left.rankNearest(cands, leftKey, left.suffixedName(right.geometryColumn, rsuffix),
+      st_distance, distanceCol, k, exclusive, how)
+  }
+
+  /** Candidate pairs of the unbounded [[sjoinKnn]]: each left row paired
+    * with the right rows of every cell the summary says can hold one of its
+    * k nearest.
+    */
+  private def knnCandidates(right: GeoDataFrame, k: Int, cellSize: Double,
+      rsuffix: String, exclusive: Boolean): DataFrame = {
     val (rightRenamed, rGeomName) = suffixed(right, rsuffix)
     val rg = rightRenamed(rGeomName)
-    val cellCol = freshCol("_knn_cell", df.columns, rightRenamed.columns, Seq(distanceCol))
+    val cellCol = freshCol("_knn_cell", df.columns, rightRenamed.columns)
     val located = rightRenamed.filter(st_xmin(rg).isNotNull) // drops null and empty
     // home cell: the grid cell holding the envelope centre, packed as
     // (ix << 32) | iy. Keys that collide far out merge into one summary
@@ -1225,40 +1215,39 @@ final case class GeoDataFrame(
     val probe = org.apache.spark.sql.GraftInterop.column(graft.sql.KnnCellProbe(
       org.apache.spark.sql.GraftInterop.expression(df(geometryColumn)), k, exclusive,
       df.sparkSession.sparkContext.broadcast(cells)))
-    val cands = df.withColumn(cellCol, explode(probe))
-      .join(homed(cs), Seq(cellCol)).drop(cellCol)
-      .withColumn(distanceCol, st_distance(col(geometryColumn), col(rGeomName)))
-    rankNearest(cands, leftKey, rGeomName, distanceCol, k, exclusive)
+    df.withColumn(cellCol, explode(probe)).join(homed(cs), Seq(cellCol)).drop(cellCol)
   }
 
   /** The nearest-neighbour core both distributed joins finish with: per
-    * `leftKey`, keep the candidates of `rank() <= k` by distance (every tie
-    * at the k-th distance survives). geopandas/shapely `exclusive=True`: a
-    * right geometry EQUAL to the left geometry is not its own nearest
-    * neighbour — topological equality, gated on dist == 0 so the expensive
-    * check runs only on coincident candidates.
+    * `leftKey`, keep the candidates of `rank() <= k` by `distance` (every
+    * tie at the k-th distance survives), then under `how="left"` bring
+    * back this frame's rows that kept none. geopandas/shapely
+    * `exclusive=True`: a right geometry EQUAL to the left geometry is not
+    * its own nearest neighbour — topological equality, gated on dist == 0
+    * so the expensive check runs only on coincident candidates.
     */
-  private def rankNearest(cands0: DataFrame, leftKey: String, rGeomName: String,
-      distanceCol: String, k: Int, exclusive: Boolean): DataFrame = {
-    val cands =
+  private def rankNearest(cands: DataFrame, leftKey: String, rGeomName: String,
+      distance: (Column, Column) => Column, distanceCol: String, k: Int,
+      exclusive: Boolean, how: String): DataFrame = {
+    val measured = cands.withColumn(distanceCol,
+      distance(col(geometryColumn), col(rGeomName)))
+    val kept =
       if (exclusive)
-        cands0.filter(!(col(distanceCol) === 0.0 &&
+        measured.filter(!(col(distanceCol) === 0.0 &&
           st_equals(col(geometryColumn), col(rGeomName))))
-      else cands0
-    val rkCol = freshCol("_rk", cands.columns)
+      else measured
+    val rkCol = freshCol("_rk", kept.columns)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(leftKey)).orderBy(col(distanceCol))
-    cands.withColumn(rkCol, rank().over(w)).filter(col(rkCol) <= k).drop(rkCol)
+    val nearest = kept.withColumn(rkCol, rank().over(w)).filter(col(rkCol) <= k).drop(rkCol)
+    if (how == "left") preserving(df, nearest, leftKey) else nearest
   }
 
-  /** geopandas how="left" for the nearest joins: left rows with no
-    * neighbour come back with null right columns and null distance.
-    * leftKey is unique by contract, so the unmatched probe is a
-    * deterministic key anti-join — no row-id stamping (unlike sjoin
-    * how=left) and no distinct() (left_anti ignores key multiplicity).
+  /** This frame without column `c`, which a join output is about to
+    * replace (the nearest joins' distance column).
     */
-  private def withUnmatchedLeft(nearest: DataFrame, leftKey: String): DataFrame =
-    unionNullPadded(nearest, df.join(nearest.select(col(leftKey)), Seq(leftKey), "left_anti"))
+  private def without(c: String): GeoDataFrame =
+    if (df.columns.contains(c)) GeoDataFrame(df.drop(c), geometryColumn) else this
 
   /** The right side with the columns it shares with this frame suffixed
     * (geopandas' `rsuffix`), and the name its geometry column ends up with.
@@ -1283,7 +1272,7 @@ final case class GeoDataFrame(
     * row, so duplicate-key pooling cannot happen). Output: the left
     * columns, `distanceCol`, the right columns (suffixed like sjoin's).
     *
-    * Semantics match [[sjoinNearest]]: every tie at the minimum distance
+    * Semantics match [[sjoinKnn]] at k = 1: every tie at the minimum distance
     * is kept, `maxDistance` (optional here) is inclusive, `exclusive=true`
     * skips topologically-equal right geometries at distance 0, and
     * `how="left"` returns unmatched rows with null right columns and null
@@ -1336,8 +1325,7 @@ final case class GeoDataFrame(
     // NearestJoin has no physical plan without graft's planner strategy
     graft.sql.functions.install(spark)
     val (rightRenamed, rGeomName) = suffixed(right, rsuffix)
-    // the distance replaces a left column of the same name
-    val left = if (df.columns.contains(distanceCol)) df.drop(distanceCol) else df
+    val left = without(distanceCol).df
     ofRows(spark, graft.plans.NearestJoin(left.queryExecution.analyzed,
       rightRenamed.queryExecution.analyzed,
       expression(spark, left(geometryColumn)), expression(spark, rightRenamed(rGeomName)),
@@ -1370,7 +1358,7 @@ final case class GeoDataFrame(
     *    build right-side difference pieces (union / symmetric_difference).
     *
     * CONTRACT: `leftKey` must be unique per left row (like
-    * [[sjoinNearest]]'s leftKey) — the difference branch unions the
+    * [[sjoinKnn]]'s leftKey) — the difference branch unions the
     * intersecting right geometries per key, so duplicate keys would pool
     * subtrahends across distinct rows and erase too much. Pass a surrogate
     * (`monotonically_increasing_id()` column) when no natural unique key
@@ -1664,9 +1652,11 @@ final case class GeoDataFrame(
     val rHome = pts.select(
       col("id").as("id_b"), col("_x").as("_xb"), col("_y").as("_yb"),
       col("_cx").as("_jx"), col("_cy").as("_jy"))
-    // lazy checkpoints (r19): each frame is still pinned (computed once,
-    // lineage cut) but the MATERIALIZATION job is folded into its first
-    // consumer's action instead of being an eager job of its own
+    // lazy checkpoints (r19): each frame is pinned (computed once, lineage
+    // cut), and its final map stage runs in its first consumer's action.
+    // The shuffle stages below it still run while the query is built:
+    // under AQE, taking the checkpoint's RDD materializes every query
+    // stage (building the clustering of 40 points starts 12 jobs)
     val cross = lExpl.join(rHome, Seq("_jx", "_jy"))
       .filter(
         (col("_xa") - col("_xb")) * (col("_xa") - col("_xb")) +

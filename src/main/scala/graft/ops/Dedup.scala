@@ -1357,10 +1357,9 @@ object Dedup {
     * Scale shape: ranking is METADATA-ONLY — the winner per cluster is
     * decided on (cluster_id, id, text length) long triples, so corpus
     * text never enters the window sort. Text crosses the wire once, in
-    * the survivor anti-join/meta-join on the id (AQE broadcasts the
-    * loser/winner sides when the duplicate fraction is small — the
-    * common case); with `blockRewrite` the t40 rebuild adds its own
-    * documented exchange.
+    * the survivor left join on the id (AQE broadcasts the ranked side
+    * when the duplicate fraction is small — the common case); with
+    * `blockRewrite` the t40 rebuild adds its own documented exchange.
     *
     * With `blockRewrite = true` the survivors additionally run
     * cross-document block dedup and the output carries the t40 schema
@@ -1391,15 +1390,15 @@ object Dedup {
       .withColumn("_rnk", row_number().over(
         byCluster.orderBy(col("_len").desc, col("_id").asc)))
       .withColumn("_n", count(lit(1)).over(byCluster))
-    val losers = ranked.filter(col("_rnk") > 1).select(col("_id"))
-    val winners = ranked.filter(col("_rnk") === 1)
-      .select(col("_id"), col("cluster_id"), col("_n").as("n_cluster_docs"))
+    // one left join keeps each cluster's winner and every unclustered
+    // document (no rank), so the components run once
     val survivors = df.withColumn("_id", col(idCol).cast("long"))
-      .join(losers, Seq("_id"), "left_anti")
-      .join(winners, Seq("_id"), "left")
+      .join(ranked.select(col("_id"), col("cluster_id"),
+        col("_n").as("n_cluster_docs"), col("_rnk")), Seq("_id"), "left")
+      .filter(col("_rnk").isNull || col("_rnk") === 1)
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("_id")))
       .withColumn("n_cluster_docs", coalesce(col("n_cluster_docs"), lit(1L)))
-      .drop("_id")
+      .drop("_id", "_rnk")
     if (!blockRewrite) survivors
     else {
       val rewritten = blockDedupRewrite(

@@ -251,7 +251,7 @@ class GeoDataFrameSpec extends AnyFunSuite {
       (300L, 10.0, 2.0), // C
       (400L, 10.0, 3.0)  // farther than C from lid=2
     ).toDF("rid", "rx", "ry").withColumn("geometry", st_point($"rx", $"ry")))
-    val out = left.sjoinNearest(right, leftKey = "lid", maxDistance = 5.0, cellSize = 4.0)
+    val out = left.sjoinKnn(right, leftKey = "lid", k = 1, maxDistance = 5.0, cellSize = 4.0)
       .select($"lid", $"rid", $"dist").as[(Long, Long, Double)].collect().sorted.toSeq
     assert(out == Seq((1L, 100L, 1.0), (1L, 200L, 1.0), (2L, 300L, 2.0)))
   }
@@ -265,12 +265,12 @@ class GeoDataFrameSpec extends AnyFunSuite {
       (100L, 0.0, 0.0), // equal geometry to lid=1
       (200L, 1.0, 0.0)
     ).toDF("rid", "rx", "ry").withColumn("geometry", st_point($"rx", $"ry")))
-    val outer = left.sjoinNearest(right, leftKey = "lid", maxDistance = 5.0,
+    val outer = left.sjoinKnn(right, leftKey = "lid", k = 1, maxDistance = 5.0,
         cellSize = 4.0, how = "left")
       .select($"lid", $"rid", $"dist")
       .as[(Long, Option[Long], Option[Double])].collect().sortBy(_._1).toSeq
     assert(outer == Seq((1L, Some(100L), Some(0.0)), (2L, None, None)))
-    val excl = left.sjoinNearest(right, leftKey = "lid", maxDistance = 5.0,
+    val excl = left.sjoinKnn(right, leftKey = "lid", k = 1, maxDistance = 5.0,
         cellSize = 4.0, how = "left", exclusive = true)
       .select($"lid", $"rid", $"dist")
       .as[(Long, Option[Long], Option[Double])].collect().sortBy(_._1).toSeq

@@ -209,7 +209,7 @@ class IndexedSjoinSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
     assert(viaKnn == truth && truth.nonEmpty)
     // bounded grid version at a radius covering everything
-    val viaGrid = lpts.sjoinNearest(rightG, leftKey = "lid", maxDistance = 500.0,
+    val viaGrid = lpts.sjoinKnn(rightG, leftKey = "lid", maxDistance = 500.0,
         cellSize = 250.0, k = k)
       .select(col("lid"), col("rid"), round(col("dist"), 9).as("d"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
@@ -256,9 +256,9 @@ class IndexedSjoinSpec extends AnyFunSuite {
     }
     val kb = lu.sjoinKnnBroadcast(ru, 2)
     assert(kb.filter(col("_sjoin_nn") =!= col("lid") * 2).count() == 0)
-    // grid path: sjoinNearest drops ONLY its own scratch column, not the
+    // grid path: sjoinKnn drops ONLY its own scratch column, not the
     // user's _cand_n
-    val gn = lu.sjoinNearest(ru, "lid", maxDistance = 30.0, cellSize = 30.0)
+    val gn = lu.sjoinKnn(ru, "lid", k = 1, maxDistance = 30.0, cellSize = 30.0)
     assert(gn.columns.count(_ == "_cand_n") == 1)
     assert(gn.filter(col("_cand_n") =!= col("lid") + 7).count() == 0)
   }
